@@ -7,8 +7,6 @@ codegen-friendly Column expression here — never a Python UDF.
 from .cleaning import (  # noqa: F401
     bounded_string_gate,
     drop_all_null_columns,
-    fill_nulls,
-    nullable_bigint,
 )
 from .dates import (  # noqa: F401
     iso_date_part,

@@ -1,7 +1,9 @@
-"""Null handling, casts and string gates (F3, F9–F11, P8).
+"""String gates and all-null column drops (F3, P8).
 
-References: string-length gate `L:116`; fillna+cast `L:176`, `S:61–63`;
-all-null column drop `L:253`.
+References: string-length gate `L:116`; all-null column drop `L:253`.
+fillna+cast (F9–F11, `L:176`, `S:61–63`) is a plain
+``coalesce(...).cast("bigint")`` Column expression (see the
+``null_fill_cast`` query).
 """
 
 from __future__ import annotations
@@ -22,21 +24,6 @@ def bounded_string_gate(col: Column | str, max_len: int = 50) -> Column:
         .when(F.length(c) <= max_len, c)
         .otherwise(F.lit(""))
     )
-
-
-def fill_nulls(df: DataFrame, value, subset: list[str] | None = None) -> DataFrame:
-    """``fillna`` (F9/F10, `L:176`, `S:63`)."""
-    return df.na.fill(value, subset=subset)
-
-
-def nullable_bigint(col: Column | str) -> Column:
-    """Nullable integer cast (F11, `S:61–62`).
-
-    pandas needed ``pd.Int64Dtype()`` to hold NULLs in an int column;
-    Spark columns are nullable by default so this is a plain cast.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("bigint")
 
 
 def drop_all_null_columns(df: DataFrame) -> DataFrame:

@@ -40,6 +40,84 @@ from ..operators.dedup import (
 from ..operators.sampling import hash_bucket, quota_sample
 from ..operators.text import gopher_quality_flags
 from ..session import load_tables
+from ..sinks.files import rebalanced
+
+
+def _near_dedup(keeper: str):
+    """Validate *keeper* now, before any Spark job runs, and return
+    the near-dedup step ``(exact, flags, threshold) -> near``: MinHash
+    →LSH candidates verified by exact Jaccard, then drop one side of
+    every confirmed pair. ``"min_id"`` drops the higher id (the
+    classic keep-first greedy; dedup_clusters gives the transitive
+    version); ``"quality"`` drops the LOWER-word-count side, ties to
+    the lower id (RefinedWeb/FineWeb keep-the-better-copy, via
+    :func:`..operators.dedup.quality_keeper_drops` on the Gopher
+    gate's already-computed ``n_words``)."""
+    if keeper not in ("min_id", "quality"):
+        raise ValueError(f"unknown keeper policy: {keeper!r}")
+
+    def near_dedup(
+        exact: DataFrame, flags: DataFrame, threshold: float
+    ) -> DataFrame:
+        pairs = minhash_lsh_pairs(exact, "doc_id", "text", threshold=threshold)
+        if keeper == "quality":
+            drop = quality_keeper_drops(
+                pairs, flags.select("doc_id", "n_words"), "doc_id", "n_words"
+            )
+        else:
+            drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+        return exact.join(drop, "doc_id", "left_anti")
+
+    return near_dedup
+
+
+def _with_split(df: DataFrame) -> DataFrame:
+    """Add the deterministic 90/5/5 train/val/test ``split`` column
+    (hash of doc_id, so a doc's split never depends on its peers)."""
+    b = hash_bucket("doc_id", 100)
+    return df.withColumn(
+        "split", F.when(b < 90, "train").when(b < 95, "val").otherwise("test")
+    )
+
+
+def _leaked_fps(tagged: DataFrame) -> DataFrame:
+    """Split-leakage audit: content fingerprints present in more than
+    one split (MUST be empty after exact dedup)."""
+    ps = tagged.select(F.md5("text").alias("fp"), "split").distinct()
+    return (
+        ps.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("n_splits"))
+        .filter(F.col("n_splits") > 1)
+    )
+
+
+def _split_counts(tagged: DataFrame) -> dict[str, int]:
+    """``n_train``/``n_val``/``n_test`` from ONE aggregation (their sum
+    is the row count of *tagged* — no separate count action)."""
+    n = {
+        r["split"]: r["n"]
+        for r in tagged.groupBy("split")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    return {f"n_{k}": n.get(k, 0) for k in ("train", "val", "test")}
+
+
+def _write_train(spark: SparkSession, capped: DataFrame, sink_root: str) -> int:
+    """Write the capped train rows to ``{sink_root}/train``, partitioned
+    by source, and return the row count read back from the files."""
+    out = os.path.join(sink_root, "train")
+    # AQE-rebalance by the partition column before the sink (guide
+    # §6): without it every upstream task emits one file per source
+    # dir (~32x file inflation measured on the latinad sink, r15)
+    rebalanced(capped, "source").write.mode("overwrite").partitionBy(
+        "source"
+    ).parquet(out)
+    # read-back verifies the write; the pinned schema keeps the count
+    # working when the funnel legitimately empties (strict gates /
+    # tiny delta → partitionBy writes only _SUCCESS and schema
+    # inference would fail)
+    return spark.read.schema(capped.schema).parquet(out).count()
 
 
 def curate_corpus(
@@ -53,22 +131,16 @@ def curate_corpus(
     """Run the curation flow over ``{sf_dir}/documents.parquet`` and
     write the curated train split to ``{sink_root}/train``.
 
-    *keeper* picks the near-dup survivor policy: ``"min_id"`` (the
-    classic keep-first greedy — drop the higher id of every
-    confirmed pair) or ``"quality"`` (drop the LOWER-word-count side
-    of every pair, ties to the lower id — the RefinedWeb-style
-    keep-the-better-copy policy, via
-    :func:`..operators.dedup.quality_keeper_drops` on the Gopher
-    gate's already-computed ``n_words``). Exact dups have identical
-    text, hence identical quality — the keeper only matters at the
-    near tier.
+    *keeper* picks the near-dup survivor policy, ``"min_id"`` or
+    ``"quality"`` (see :func:`_near_dedup`). Exact dups have
+    identical text, hence identical quality — the keeper only matters
+    at the near tier.
 
     Returns the stage-count metrics a pipeline run logs:
     (n_input, n_quality, n_exact, n_near, n_leaked_fps, n_train,
     n_val, n_test, n_train_capped).
     """
-    if keeper not in ("min_id", "quality"):
-        raise ValueError(f"unknown keeper policy: {keeper!r}")
+    near_dedup = _near_dedup(keeper)
     d = load_tables(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -98,19 +170,7 @@ def curate_corpus(
     # free when the frame is GC'd at call end.
     exact = exact.transform(_ckpt)
 
-    # near-dedup: LSH candidates verified by exact Jaccard; greedy
-    # drop of the higher id in every confirmed pair (the standard
-    # keep-first policy; dedup_clusters gives the transitive version)
-    pairs = minhash_lsh_pairs(
-        exact, "doc_id", "text", threshold=near_dup_threshold
-    )
-    if keeper == "quality":
-        drop = quality_keeper_drops(
-            pairs, flags.select("doc_id", "n_words"), "doc_id", "n_words"
-        )
-    else:
-        drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    near = exact.join(drop, "doc_id", "left_anti")
+    near = near_dedup(exact, flags, near_dup_threshold)
 
     # deterministic split + leakage audit (fp crossing splits).
     # `tagged` sits above the LSH candidate join — checkpoint it so
@@ -119,39 +179,19 @@ def curate_corpus(
     # audit and the quota rank are concurrent consumers within the
     # write action, and the un-truncated LSH plan is what OOMed a
     # default-heap driver in the v3 chain before r12's fix).
-    b = hash_bucket("doc_id", 100)
-    split = F.when(b < 90, "train").when(b < 95, "val").otherwise("test")
-    tagged = near.withColumn("split", split).transform(_ckpt)
-    ps = tagged.select(F.md5("text").alias("fp"), "split").distinct()
-    leaked = (
-        ps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_splits"))
-        .filter(F.col("n_splits") > 1)
-    )
+    tagged = _with_split(near).transform(_ckpt)
+    leaked = _leaked_fps(tagged)
 
     train = tagged.filter(F.col("split") == "train").drop("split")
     capped = quota_sample(train, "source", "doc_id", quota_per_source).drop(
         "rank_in_group"
     )
 
-    out = os.path.join(sink_root, "train")
-    # AQE-rebalance by the partition column before the sink (guide
-    # §6): without it every upstream task emits one file per source
-    # dir (~32x file inflation measured on the latinad sink, r15)
-    from ..sinks.files import _rebalanced
+    n_train_capped = _write_train(spark, capped, sink_root)
 
-    _rebalanced(capped, "source").write.mode("overwrite").partitionBy(
-        "source"
-    ).parquet(out)
-
-    # ONE aggregation covers all three split counts (and their sum is
-    # the post-near-dedup count — no separate near.count() action)
-    split_counts = {
-        r["split"]: r["n"]
-        for r in tagged.groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    # the split counts sum to the post-near-dedup count — no separate
+    # near.count() action
+    split_counts = _split_counts(tagged)
     # n_input and n_quality come from ONE aggregation over the flags
     # frame (review catch: d.count() + kept.count() paid a separate
     # input scan plus a full re-run of the Gopher tokenization)
@@ -165,16 +205,8 @@ def curate_corpus(
         "n_exact": exact.count(),
         "n_near": sum(split_counts.values()),
         "n_leaked_fps": leaked.count(),
-        "n_train": split_counts.get("train", 0),
-        "n_val": split_counts.get("val", 0),
-        "n_test": split_counts.get("test", 0),
-        # read-back verifies the write; the pinned schema keeps the
-        # count working when the funnel legitimately empties (strict
-        # gates / tiny delta → partitionBy writes only _SUCCESS and
-        # schema inference would fail)
-        "n_train_capped": spark.read.schema(capped.schema)
-        .parquet(out)
-        .count(),
+        **split_counts,
+        "n_train_capped": n_train_capped,
     }
     return counts
 
@@ -447,8 +479,7 @@ def curate_corpus_v3_frames(
     from ..operators.dedup import normalize_url, span_fingerprints
     from ..operators.sampling import dsir_importance_scores
 
-    if keeper not in ("min_id", "quality"):
-        raise ValueError(f"unknown keeper policy: {keeper!r}")
+    near_dedup = _near_dedup(keeper)
     d = load_tables(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", "text"
     )
@@ -485,20 +516,7 @@ def curate_corpus_v3_frames(
     ).transform(_ckpt)
     frames["exact"] = exact
 
-    pairs = minhash_lsh_pairs(
-        exact, "doc_id", "text", threshold=near_dup_threshold
-    )
-    # same keeper switch as curate_corpus: quality (drop the
-    # lower-word-count side, ties to the lower id — the default
-    # since r11, matching RefinedWeb/FineWeb keep-the-better-copy
-    # practice) or min_id (classic keep-first greedy)
-    if keeper == "quality":
-        drop = quality_keeper_drops(
-            pairs, flags.select("doc_id", "n_words"), "doc_id", "n_words"
-        )
-    else:
-        drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    near = exact.join(drop, "doc_id", "left_anti").transform(_ckpt)
+    near = near_dedup(exact, flags, near_dup_threshold).transform(_ckpt)
     frames["near"] = near
 
     # span dedup: a doc at least half of whose W-token spans are
@@ -534,16 +552,9 @@ def curate_corpus_v3_frames(
     )
     frames["dsir"] = selected
 
-    b = hash_bucket("doc_id", 100)
-    split = F.when(b < 90, "train").when(b < 95, "val").otherwise("test")
-    tagged = selected.withColumn("split", split).transform(_ckpt)
+    tagged = _with_split(selected).transform(_ckpt)
     frames["tagged"] = tagged
-    ps = tagged.select(F.md5("text").alias("fp"), "split").distinct()
-    frames["leaked"] = (
-        ps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_splits"))
-        .filter(F.col("n_splits") > 1)
-    )
+    frames["leaked"] = _leaked_fps(tagged)
 
     train = tagged.filter(F.col("split") == "train").drop("split")
     frames["capped"] = quota_sample(
@@ -564,13 +575,7 @@ def curate_corpus_v3_counts(
         F.count(F.lit(1)).alias("n_u"),
         F.sum(F.col("pass_all").cast("long")).alias("n_q"),
     ).first()
-    split_counts = {
-        r["split"]: r["n"]
-        for r in frames["tagged"]
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    split_counts = _split_counts(frames["tagged"])
     return {
         "n_input": frames["input"].count(),
         "n_url": uq["n_u"],
@@ -580,9 +585,7 @@ def curate_corpus_v3_counts(
         "n_span": frames["span"].count(),
         "n_dsir": sum(split_counts.values()),
         "n_leaked_fps": frames["leaked"].count(),
-        "n_train": split_counts.get("train", 0),
-        "n_val": split_counts.get("val", 0),
-        "n_test": split_counts.get("test", 0),
+        **split_counts,
     }
 
 
@@ -652,15 +655,5 @@ def curate_corpus_v3(
     if sink_root is None:
         counts["n_train_capped"] = capped.count()
     else:
-        out = os.path.join(sink_root, "train")
-        from ..sinks.files import _rebalanced
-
-        # file sizing: see curate_corpus (guide §6 rebalance-on-write)
-        _rebalanced(capped, "source").write.mode("overwrite").partitionBy(
-            "source"
-        ).parquet(out)
-        # schema-pinned read-back: see curate_corpus
-        counts["n_train_capped"] = (
-            spark.read.schema(capped.schema).parquet(out).count()
-        )
+        counts["n_train_capped"] = _write_train(spark, capped, sink_root)
     return counts

@@ -81,635 +81,18 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# The correctness driver records the FIRST 50 registry entries each
-# round, so ordering is load-bearing. r01 covered the relational
-# suite; r02 dedup/similarity/text/multimodal/corpus/streaming-equiv;
-# r03 the never-checked backlog plus the round-3 surface; r04 the
-# then-never-green six plus the round-4 surface (50/50 green — but
-# registry growth outran the window, deferring 17 locally-verified
-# queries). The r05 window pins, in order: those 17 (never any
-# driver row — they MUST occupy slots 1–17, r04 verdict item 1),
-# the queries whose implementation changed this round (re-prove),
-# the new round-5 queries, then re-proof fill from the r01-only
-# greens (stalest evidence first). Everything else keeps its
-# existing green row; after r05 every registry query has a
-# driver-green row in r01∪…∪r05.
-# The r06 window drains the plan queued below at _R05_WINDOW's tail:
-# slots 1–10 re-prove every query whose plan or oracle changed this
-# round (the dedup-verifier broadcast removal touched all six
-# Jaccard-family queries; the grouped_topk NaN-flag struct touched
-# top3_per_segment_agg; seasonal_mase gained the zero guard; the MMR
-# oracle now derives λ/dim from shared constants; hll_source_overlap
-# grew the est_rel_err_band column), slots 11–17 are the new round-6
-# queries, and the rest drains ALL 32 remaining r01-only re-proofs
-# plus the stalest r02-only query — after r06 no query's newest
-# driver evidence predates r03 except the r02 cohort.
-_R06_WINDOW = [
-    # changed in round 6 — re-prove under the driver
-    "containment_dedup_pairs",
-    "ngram_jaccard_pairs",
-    "prefix_jaccard_pairs",
-    "minhash_dedup_pairs",
-    "near_dup_clusters",
-    "incremental_dedup_pairs",
-    "mase_seasonal_screen",
-    "mmr_diversified_topk",
-    "hll_source_overlap",
-    "top3_per_segment_agg",
-    # new in round 6
-    "rm3_expanded_bm25",
-    "minhash_jaccard_calibration",
-    "trigram_lm_scores",
-    "cc_cluster_sizes",
-    "heaps_law_vocab_fit",
-    "mmr_ivf_topk",
-    "curation_counts_report",
-    # r01-only re-proof fill (ALL 32 remaining; drained this round)
-    "acctbal_dominance",
-    "approx_distinct_certificate",
-    "approx_quantile_certificate",
-    "brand_price_stats",
-    "cdc_split_new",
-    "cdc_split_updated",
-    "corr_regression_qty_price",
-    "cube_order_stats",
-    "custdist_order_counts",
-    "customer_set_ops",
-    "customers_with_big_order",
-    "distinct_cardinalities",
-    "drift_tolerant_select",
-    "drop_all_null_columns_q",
-    "dropna_after_left_join",
-    "filter_variety",
-    "grouping_sets_revenue",
-    "json_flatten_props",
-    "large_volume_customers",
-    "nation_revenue_share",
-    "order_rank_stats",
-    "order_value_quantiles",
-    "orders_with_large_items",
-    "promo_revenue_by_supp_nation",
-    "rich_inactive_customers",
-    "rollup_quantity",
-    "scalar_null_toolbox",
-    "shipping_priority",
-    "sliding_window_refresh",
-    "string_length_gate",
-    "string_toolbox",
-    "trailing_week_revenue",
-    # stalest r02-only re-proof (slot 50; the IVF tier mmr_ivf_topk
-    # composes with)
-    "ann_ivf_topk",
-]
-
-# The r09 window drains the queue the r06/r07/r08 verdicts booked
-# (rounds 7-8 produced no builder commits, so the r06 window ran
-# three times; this list finally lands the plan AS CODE). Slots 1-3:
-# the post-freeze IVF-path re-proofs — their corpus assignment became
-# a one-scan max_by after the r06 driver window froze
-# (ann_ivf_recall is additionally the stalest of the three: its only
-# driver row is r02). Slots 4-11: the eight round-6b queries that
-# have NEVER had a driver row; the round-9 semdedup scale-K and
-# band-sweep truth-stratum fixes land in these same queries, so the
-# slots double as re-proofs of this round's changes. Slots 12-14:
-# the three NEW round-9 queries (URL/domain-tier dedup, cross-doc
-# substring spans, DSIR importance scores) — first-time checks
-# outrank re-proof fill, the r04-window precedent. Slots 15-50:
-# re-proof fill from the r02-only cohort (41 queries whose newest
-# driver evidence is round 2), alphabetical; the four that do not
-# fit (top_distinctive_terms, user_event_profile, vocabulary_top200,
-# weighted_source_mixture) head the r10 queue.
-_R09_WINDOW = [
-    # post-freeze IVF re-proofs (plans changed after the r06 freeze)
-    "ann_ivf_recall",
-    "ann_ivfpq_recall",
-    "ann_ivf_kmeans_recall",
-    # round-6b queries — first-ever driver rows
-    "semdedup_cluster_pairs",
-    "ivf_probe_recall_sweep",
-    "heavy_hitter_tokens",
-    "readability_by_source",
-    "cusum_value_changepoints",
-    "lsh_band_sweep",
-    "semdedup_recall_audit",
-    "ann_ivf_incremental",
-    # new in round 9 — first-ever driver rows
-    "url_domain_dedup_health",
-    "cross_doc_dup_spans",
-    "dsir_importance_scores",
-    # r02-only re-proof fill (stalest driver evidence; alphabetical)
-    "ann_bruteforce_topk",
-    "ann_lsh_multitable_topk",
-    "ann_lsh_recall",
-    "ann_lsh_topk",
-    "asof_last_view_before_purchase",
-    "benchmark_contamination",
-    "cdc_replay_equiv",
-    "conversion_funnel",
-    "dedup_keep_best",
-    "deterministic_split_counts",
-    "doc_fingerprints",
-    "doc_repetition_stats",
-    "domain_extraction_stats",
-    "embedding_array_stats",
-    "embedding_cosine_pairs",
-    "embedding_lsh_dup_pairs",
-    "event_value_histogram",
-    "exact_dedup",
-    "filter_events",
-    "fuzzy_part_name_pairs",
-    "hourly_event_rollup",
-    "lang_id_guess",
-    "lsh_bucket_assignments",
-    "maintained_rollup_equiv",
-    "media_content_stats",
-    "media_decode_dimensions",
-    "pii_redaction_stats",
-    "sessionize_events",
-    "simhash_fingerprints",
-    "simhash_near_pairs",
-    "sketch_distinct_maintenance",
-    "sliding_window_counts",
-    "stable_sample_docs",
-    "stratified_sample_by_lang",
-    "text_quality_scores",
-    "token_count_stats",
-]
-
-# The r10 window drains the queue the r09 verdict booked. Slots 1-4:
-# the four r02-only stragglers displaced from the r09 window — after
-# these run, no query's newest driver evidence predates r03. Slots
-# 5-17: the queries NEW in round 10 (the curation-v3 composition
-# registry wiring the r09 advice asked for, the n-gram-profile
-# language-ID upgrade, the merged-interval span-coverage dedup, the
-# quality-aware near-dup keeper, the full Gopher repetition-fraction
-# table, CCNet perplexity buckets, ANN hard-negative mining, the
-# epoch-shuffle manifest, the streaming ingest-dedup fold, and the
-# quality-chosen cluster representatives and their IVF mining tier) —
-# first-time checks outrank re-proof fill, the r04-window
-# precedent. Slots 18+: re-proof fill
-# from the r03 cohort (44 queries whose newest driver evidence is
-# round 3), alphabetical; the list deliberately overflows 50 so a
-# missing new query cannot shrink the window — the driver records
-# the first 50 resolvable names. Whichever r03 names miss the cut
-# head the r11 queue.
-_R10_WINDOW = [
-    # r02-only stragglers (stalest driver evidence in the registry)
-    "top_distinctive_terms",
-    "user_event_profile",
-    "vocabulary_top200",
-    "weighted_source_mixture",
-    # new in round 10 — first-ever driver rows
-    "curation_v3_counts_report",
-    "lang_id_ngram_profile",
-    "merged_span_coverage",
-    "quality_keeper_dedup",
-    "gopher_repetition_fractions",
-    "ccnet_perplexity_buckets",
-    "hard_negative_mining",
-    "epoch_shuffle_manifest",
-    "streaming_dedup_equiv",
-    "cluster_quality_representatives",
-    "hard_negative_ivf_mining",
-    "benchmark_span_contamination",
-    "source_contamination_rollup",
-    # r03-only re-proof fill (alphabetical; tail past slot 50 feeds
-    # the r11 queue)
-    "avg_inter_event_gap",
-    "bilateral_trade_volume",
-    "boilerplate_removal",
-    "cluster_safe_splits",
-    "corpus_curation_pipeline",
-    "daily_activity_gapfill",
-    "daily_peak_concurrency",
-    "data_quality_report",
-    "decile_spend_profile",
-    "disjunctive_band_revenue",
-    "document_chunks",
-    "dominant_part_suppliers",
-    "embedding_dim_stats",
-    "event_transition_matrix",
-    "filtered_aggregates",
-    "forecast_revenue_change",
-    "join_key_skew_profile",
-    "late_ship_priority_orders",
-    "media_frame_sample",
-    "min_cost_supplier_per_part",
-    "moving_avg_order_price",
-    "nation_market_share",
-    "oov_rate_by_lang",
-    "passage_dup_stats",
-    "priority_orders_with_big_items",
-    "profile_orders_columns",
-    "profit_by_nation_year",
-    "retention_cohorts",
-    "returned_item_customers",
-    "rolling_7d_active_users",
-    "salted_quantity_by_flag",
-    "sequence_packing",
-    "similar_user_activity",
-    "small_quantity_revenue_loss",
-    "sole_late_suppliers",
-    "source_lang_affinity",
-    "supplier_variety_by_part",
-    "temperature_mixture",
-    "tokenizer_fertility_by_lang",
-    "top_revenue_supplier",
-    "variant_props_rollup",
-    "views_before_purchase_ranged",
-    "window_function_toolbox",
-    "winsorized_order_stats",
-    # (r11 queue drained: see _R11_WINDOW below, written as code in
-    # the first r11 commit per the r07/r08 lesson.)
-]
-
-# The r11 window drains the queue booked at _R10_WINDOW's tail:
-# lead with the queries whose plan or oracle changes in r11 (the
-# epoch_shuffle distributed-rank fix, the quality-keeper left-join
-# fallback, the curate_corpus_v3 keeper-default flip, the lang-id
-# persist discipline — the r10 ADVICE items), then the queries NEW
-# in r11 (spliced in as each lands, before the re-proof fill), then
-# the eleven r03-only names (small_quantity_revenue_loss ..
-# winsorized_order_stats — exactly the alphabetical tail past the
-# r10 window's 50-cut), then re-proof fill from the r04 cohort
-# (44 queries whose newest driver evidence is round 4),
-# alphabetical. The list deliberately overflows 50 so a missing
-# name cannot shrink the window — the driver records the first 50
-# resolvable entries. Whichever r04 names miss the cut head the
-# r12 queue.
-_R11_WINDOW = [
-    # plan/oracle changed in r11 — re-prove (r10 ADVICE items)
-    "epoch_shuffle_manifest",
-    "quality_keeper_dedup",
-    "curation_v3_counts_report",
-    "lang_id_ngram_profile",
-    # new in round 11 — first-ever driver rows
-    "token_ngram_contamination",
-    "token_contamination_rollup",
-    "token_span_coverage",
-    "streaming_span_dedup_equiv",
-    "curation_v3_counts_lite",
-    "keeper_fallback_drops",
-    "nb_quality_classifier",
-    "curation_drop_attribution",
-    "span_threshold_sweep",
-    "epoch_shuffle_shard_manifest",
-    "token_dup_rate_by_source",
-    "keeper_policy_delta",
-    # new in round 11b (post-queue wave) — first-ever driver rows
-    "span_removal_rewrite",
-    "semantic_decontamination",
-    "matryoshka_recall_sweep",
-    "part_ship_overlap_pairs",
-    "token_budget_selection",
-    "curriculum_phase_manifest",
-    "scoped_vs_global_dedup",
-    "quality_ensemble_rank",
-    "doremi_mixture_weights",
-    "dsir_vs_nb_agreement",
-    "unimax_language_budgets",
-    "l_diversity_report",
-    "ann_matryoshka_topk",
-    "dup_span_mask_manifest",
-    # r03-only re-proof (the booked eleven)
-    "small_quantity_revenue_loss",
-    "sole_late_suppliers",
-    "source_lang_affinity",
-    "supplier_variety_by_part",
-    "temperature_mixture",
-    "tokenizer_fertility_by_lang",
-    "top_revenue_supplier",
-    "variant_props_rollup",
-    "views_before_purchase_ranged",
-    "window_function_toolbox",
-    "winsorized_order_stats",
-    # r04-cohort re-proof fill (alphabetical; tail past slot 50
-    # feeds the r12 queue)
-    "ann_multiprobe_recall",
-    "ann_sq8_recall",
-    "array_toolbox_embeddings",
-    "benchmark_decontamination",
-    "bigram_logprob_scores",
-    "bm25_search_topk",
-    "bpe_encode_stats",
-    "bpe_learned_merges",
-    "bpe_pair_counts",
-    "cms_token_frequency",
-    "daily_purchase_rate_ci",
-    "doc_novelty_scores",
-    "dup_cluster_histogram",
-    "event_value_outliers",
-    "ewma_user_daily_value",
-    "hybrid_search_topk",
-    "interpolated_daily_values",
-    "k_anonymity_report",
-    "label_centroid_quality",
-    "label_noise_scan",
-    "nation_triangle_counts",
-    "native_session_rollup",
-    "ohlc_daily_bars",
-    "pagerank_trade_graph",
-    "positional_unnest_embeddings",
-    "psi_value_drift",
-    "quality_pr_curve",
-    "quota_sample_sources",
-    "rrf_fusion_topk",
-    "scd2_point_in_time",
-    "scd2_priority_history",
-    "session_funnel",
-    "snapshot_diff_orders",
-    "sorted_neighborhood_dups",
-    "source_pair_jaccard",
-    "stateful_session_equiv",
-    "tfidf_cosine_pairs",
-    "touch_attribution_paths",
-    "ts_similarity_blocked_pairs",
-    "ts_similarity_bruteforce_topk",
-    "unigram_logprob_scores",
-    "value_median_mad_by_type",
-    "zipf_fit_top_tokens",
-    "zorder_key_stats",
-    # (r12 queue drained: see _R12_WINDOW below, written as code in
-    # the first r12 commit per the r07/r08 lesson.)
-]
-
-# The r12 window drains the queue the r11 verdict booked at
-# _R11_WINDOW's tail: lead with the queries whose plan or oracle
-# changes in r12 (the lang-id single-explode tf rework, the
-# part_ship floor-cast alignment, the unimax budget widening — the
-# r11 ADVICE/perf items), then the queries NEW in r12 (the dedup
-# sidecar equivalence fold and the histogram-equalized
-# ranked_cumsum exercise), then the 35 r04-cohort names from
-# cms_token_frequency (alphabetical) on — exactly the tail past the
-# r11 window's 50-cut — then re-proof fill from the r05 cohort
-# (44 queries whose newest driver evidence is round 5),
-# alphabetical. The list deliberately overflows 50 so a missing
-# name cannot shrink the window — the driver records the first 50
-# resolvable entries. Whichever r05 names miss the cut head the
-# r13 queue.
-_R12_WINDOW = [
-    # plan/oracle changed in r12 — re-prove (r11 ADVICE/perf items,
-    # plus the v3 chain whose stage frames moved from lazy persist
-    # to eager localCheckpoint after the vanilla-session sweep OOMed
-    # the attribution join's 5.4MB un-truncated logical plan on a
-    # default-heap driver)
-    "lang_id_ngram_profile",
-    "part_ship_overlap_pairs",
-    "unimax_language_budgets",
-    "curation_v3_counts_report",
-    "curation_v3_counts_lite",
-    "curation_drop_attribution",
-    # new in round 12 — first-ever driver rows
-    "dedup_sidecar_equiv",
-    "token_budget_equalized",
-    # r04-cohort re-proof (the booked 35: the alphabetical tail past
-    # the r11 window's 50-cut, cms_token_frequency on)
-    "cms_token_frequency",
-    "daily_purchase_rate_ci",
-    "doc_novelty_scores",
-    "dup_cluster_histogram",
-    "event_value_outliers",
-    "ewma_user_daily_value",
-    "hybrid_search_topk",
-    "interpolated_daily_values",
-    "k_anonymity_report",
-    "label_centroid_quality",
-    "label_noise_scan",
-    "nation_triangle_counts",
-    "native_session_rollup",
-    "ohlc_daily_bars",
-    "pagerank_trade_graph",
-    "positional_unnest_embeddings",
-    "psi_value_drift",
-    "quality_pr_curve",
-    "quota_sample_sources",
-    "rrf_fusion_topk",
-    "scd2_point_in_time",
-    "scd2_priority_history",
-    "session_funnel",
-    "snapshot_diff_orders",
-    "sorted_neighborhood_dups",
-    "source_pair_jaccard",
-    "stateful_session_equiv",
-    "tfidf_cosine_pairs",
-    "touch_attribution_paths",
-    "ts_similarity_blocked_pairs",
-    "ts_similarity_bruteforce_topk",
-    "unigram_logprob_scores",
-    "value_median_mad_by_type",
-    "zipf_fit_top_tokens",
-    "zorder_key_stats",
-    # r05-cohort re-proof fill (alphabetical; tail past slot 50
-    # feeds the r13 queue)
-    "adamic_adar_order_links",
-    "ann_pq_adc_recall",
-    "ann_pq_rerank_recall",
-    "argmax_order_per_status",
-    "cooccurrence_rec_hitrate",
-    "corpus_budget_coverage",
-    "cube_order_counts",
-    "customers_without_orders",
-    "derived_surrogate_key",
-    "doc_length_auc_by_source",
-    "embedding_norm_health",
-    "event_pair_rules",
-    "filter_project_scale",
-    "first_last_order_price",
-    "gopher_quality_report",
-    "iso_split_and_parse",
-    "label_projection_stats",
-    "lang_id_confusion",
-    "left_join_enrich",
-    "monthly_order_volume",
-    "null_fill_cast",
-    "null_safe_join",
-    "outlier_orders_p95",
-    "pca_top2_components",
-    "pca_top_component",
-    "pivot_qty_by_status",
-    "pricing_summary",
-    "purged_fold_report",
-    "rank_normalized_value_by_type",
-    "revenue_by_nation",
-    "running_customer_spend",
-    "score_reliability_bins",
-    "segment_target_encoding",
-    "source_dup_health",
-    "source_signature_terms",
-    "source_temperature_mix",
-    "split_leakage_report",
-    "top100_orders",
-    "top3_orders_per_segment",
-    "union_with_drift",
-    "unpivot_order_metrics",
-    "value_quartiles_by_type",
-    "weighted_sample_docs",
-    "window_toolbox_orders",
-    # (r13 queue drained: see _R13_WINDOW below, written as code in
-    # the first r13 commit per the r07/r08 lesson.)
-]
-
-# The r13 window drains the queue the r12 verdict booked at
-# _R12_WINDOW's tail: lead with the queries whose plan changes in
-# r13 — curation_counts_report (curate_corpus v2's two lazy persists
-# become eager localCheckpoints, the same concurrent-stage/lineage
-# fix r12 applied to curate_increment and the v3 frames) and
-# dedup_sidecar_equiv (the driver-side report collect drops — every
-# fold step is localCheckpointed so the returned union reads
-# checkpoint blocks, not the deleted temp parquet; plus the span
-# fingerprint recipe unification) — then the query NEW in r13
-# (sidecar_compaction_equiv: the admit fold with a mid-fold
-# compact_sidecars, proving the compaction swap preserves probe
-# semantics under the driver), then the 37 r05-stale names (the
-# _R12_WINDOW tail past slot 50 — computed from the CORRECTNESS_r*
-# union, customers_without_orders on, alphabetical), then re-proof
-# fill from the r08 cohort (newest driver evidence round 8),
-# alphabetical. The list deliberately overflows 50 so a missing
-# name cannot shrink the window — the driver records the first 50
-# resolvable entries. Whichever r08 names miss the cut head the
-# r14 queue.
-_R13_WINDOW = [
-    # plan changed in r13 — re-prove
-    "curation_counts_report",
-    "dedup_sidecar_equiv",
-    # new in round 13 — first-ever driver row
-    "sidecar_compaction_equiv",
-    # r05-cohort re-proof (the booked 37: newest driver evidence is
-    # still round 5; alphabetical)
-    "customers_without_orders",
-    "derived_surrogate_key",
-    "doc_length_auc_by_source",
-    "embedding_norm_health",
-    "event_pair_rules",
-    "filter_project_scale",
-    "first_last_order_price",
-    "gopher_quality_report",
-    "iso_split_and_parse",
-    "label_projection_stats",
-    "lang_id_confusion",
-    "left_join_enrich",
-    "monthly_order_volume",
-    "null_fill_cast",
-    "null_safe_join",
-    "outlier_orders_p95",
-    "pca_top2_components",
-    "pca_top_component",
-    "pivot_qty_by_status",
-    "pricing_summary",
-    "purged_fold_report",
-    "rank_normalized_value_by_type",
-    "revenue_by_nation",
-    "running_customer_spend",
-    "score_reliability_bins",
-    "segment_target_encoding",
-    "source_dup_health",
-    "source_signature_terms",
-    "source_temperature_mix",
-    "split_leakage_report",
-    "top100_orders",
-    "top3_orders_per_segment",
-    "union_with_drift",
-    "unpivot_order_metrics",
-    "value_quartiles_by_type",
-    "weighted_sample_docs",
-    "window_toolbox_orders",
-    # r08-cohort re-proof fill (alphabetical; curation_counts_report
-    # already heads the window — tail past slot 50 feeds the r14
-    # queue)
-    "acctbal_dominance",
-    "ann_ivf_topk",
-    "approx_distinct_certificate",
-    "approx_quantile_certificate",
-    "brand_price_stats",
-    "cc_cluster_sizes",
-    "cdc_split_new",
-    "cdc_split_updated",
-    "containment_dedup_pairs",
-    "corr_regression_qty_price",
-    "cube_order_stats",
-    "custdist_order_counts",
-    "customer_set_ops",
-    "customers_with_big_order",
-    "distinct_cardinalities",
-    "drift_tolerant_select",
-    "drop_all_null_columns_q",
-    "dropna_after_left_join",
-    "filter_variety",
-    "grouping_sets_revenue",
-    "heaps_law_vocab_fit",
-    "hll_source_overlap",
-    "incremental_dedup_pairs",
-    "json_flatten_props",
-    "large_volume_customers",
-    "mase_seasonal_screen",
-    "minhash_dedup_pairs",
-    "minhash_jaccard_calibration",
-    "mmr_diversified_topk",
-    "mmr_ivf_topk",
-    "nation_revenue_share",
-    "near_dup_clusters",
-    "ngram_jaccard_pairs",
-    "order_rank_stats",
-    "order_value_quantiles",
-    "orders_with_large_items",
-    "prefix_jaccard_pairs",
-    "promo_revenue_by_supp_nation",
-    "rich_inactive_customers",
-    "rm3_expanded_bm25",
-    "rollup_quantity",
-    "scalar_null_toolbox",
-    "shipping_priority",
-    "sliding_window_refresh",
-    "string_length_gate",
-    "string_toolbox",
-    "top3_per_segment_agg",
-    "trailing_week_revenue",
-    "trigram_lm_scores",
-    # (r14 queue drained: see _R14_WINDOW below, written as code in
-    # the first r14 commit per the r07/r08 lesson.)
-]
-
-# The r14 window drains the queue the r13 verdict booked at
-# _R13_WINDOW's tail: slot 1 is unpivot_status_metrics — the only
-# registry query with zero driver rows ever (registered mid-r13 when
-# the unpivot_order_metrics name collision was de-collided; oracle
-# and sf0.1 deep sweep already green) — then the queries NEW in r14
-# (media_dimensions_report: pure-Python PNG/JPEG/GIF/BMP/WAV header
-# decode replacing the NotImplementedError default;
-# similar_user_activity_ann: the IVF twin of the exact all-pairs
-# user-profile verifier), then the two fold-family queries whose
-# plans the r14 persist audit may touch (sidecar_compaction_equiv,
-# curation_drop_attribution — fresh r13 rows, but re-prove under the
-# driver if the audit changes their checkpoint shape; harmless
-# re-proof otherwise), then the 11 queries whose PLANS changed in
-# the r13 persist→localCheckpoint conversion but sat outside the
-# r13 window's 50-cut, then r08-cohort re-proof fill (the 34
-# remaining names whose newest driver evidence is round 8,
-# alphabetical — draining the cohort so nothing predates r09), then
-# r09-cohort overflow armor (49 names, alphabetical — whatever
-# misses the 50-cut heads the r15 queue). The list deliberately
-# overflows 50 so a missing name cannot shrink the window.
-_R14_WINDOW = [
-    # never driver-checked — first-ever driver row
+# The correctness driver records the first 50 registry entries, so
+# this order is load-bearing: registry() puts these names first. The
+# list deliberately runs past 50 so one missing name cannot shrink
+# the window.
+DRIVER_WINDOW = [
     "unpivot_status_metrics",
-    # new in round 14 (concat_chunk_packing_report landed late-round, so
-    # the head is 18 and TWO r08 fill names — trailing_week_revenue,
-    # trigram_lm_scores — slip past the 50-cut to head the r15 queue)
     "media_dimensions_report",
     "similar_user_activity_ann",
     "concat_chunk_packing_report",
-    # fold-family: r14 persist-audit targets — all three plans DID
-    # change (compaction stats ride the write as Observations;
-    # survivors checkpointed in the shared fold body; the url probe
-    # reads the flags checkpoint), so dedup_sidecar_equiv joins the
-    # two booked names. Head grows to 17, so the alphabetically-last
-    # r08 fill name (trigram_lm_scores) slips past the 50-cut and
-    # heads the r15 queue — changed-plan re-proof outranks staleness.
     "sidecar_compaction_equiv",
     "curation_drop_attribution",
     "dedup_sidecar_equiv",
-    # plan changed in r13 (persist→localCheckpoint conversion) —
-    # driver evidence still pre-dates the change
     "minhash_dedup_pairs",
     "incremental_dedup_pairs",
     "near_dup_clusters",
@@ -721,7 +104,6 @@ _R14_WINDOW = [
     "keeper_fallback_drops",
     "hll_source_overlap",
     "ts_similarity_blocked_pairs",
-    # r08-cohort re-proof fill (34 names; alphabetical)
     "cube_order_stats",
     "custdist_order_counts",
     "customer_set_ops",
@@ -756,8 +138,6 @@ _R14_WINDOW = [
     "top3_per_segment_agg",
     "trailing_week_revenue",
     "trigram_lm_scores",
-    # r09-cohort overflow armor (49 names; alphabetical; the tail
-    # past the 50-cut heads the r15 queue)
     "ann_bruteforce_topk",
     "ann_ivf_incremental",
     "ann_ivf_kmeans_recall",
@@ -807,163 +187,6 @@ _R14_WINDOW = [
     "text_quality_scores",
     "token_count_stats",
     "url_domain_dedup_health",
-    # r15 window queue: lead with any queries whose plan or oracle
-    # changes in r15 and the queries new in r15, then the r09-cohort
-    # names above that miss this window's 50-cut, then re-proof fill
-    # from the r10 cohort (next-stalest), alphabetical. Write the
-    # list AS CODE in the first r15 commit and repin
-    # tests/test_driver_contract.py's test_driver_window_invariants
-    # to _R15_WINDOW in the same commit.
-]
-
-_R05_WINDOW = [
-    # never driver-checked (deferred from the r04 window; slots 1–17)
-    "purged_fold_report",
-    "event_pair_rules",
-    "segment_target_encoding",
-    "source_temperature_mix",
-    "window_toolbox_orders",
-    "top3_per_segment_agg",
-    "value_quartiles_by_type",
-    "cube_order_counts",
-    "source_signature_terms",
-    "label_projection_stats",
-    "lang_id_confusion",
-    "score_reliability_bins",
-    "cooccurrence_rec_hitrate",
-    "rank_normalized_value_by_type",
-    "pca_top2_components",
-    "hll_source_overlap",
-    "source_dup_health",
-    # changed in round 5 — re-prove under the driver
-    "weighted_sample_docs",
-    "ann_pq_adc_recall",
-    "ann_pq_rerank_recall",
-    "ann_ivfpq_recall",
-    "pca_top_component",
-    # new in round 5
-    "containment_dedup_pairs",
-    "split_leakage_report",
-    "gopher_quality_report",
-    "corpus_budget_coverage",
-    "embedding_norm_health",
-    "doc_length_auc_by_source",
-    "mase_seasonal_screen",
-    "adamic_adar_order_links",
-    "mmr_diversified_topk",
-    "unpivot_order_metrics",
-    # r01-only re-proof fill (stalest driver evidence; replaced
-    # from the END of this list as round-5 queries land)
-    "pricing_summary",
-    "filter_project_scale",
-    "left_join_enrich",
-    "customers_without_orders",
-    "union_with_drift",
-    "top100_orders",
-    "derived_surrogate_key",
-    "null_fill_cast",
-    "iso_split_and_parse",
-    "revenue_by_nation",
-    "top3_orders_per_segment",
-    "pivot_qty_by_status",
-    "running_customer_spend",
-    "outlier_orders_p95",
-    "null_safe_join",
-    "first_last_order_price",
-    "monthly_order_volume",
-    "argmax_order_per_status",
-    # r06 window queue (keep new-query growth inside the 50-slot
-    # verification budget, r04 verdict item 4): lead with any queries
-    # changed in r06, then candidates — RM3 pseudo-relevance-feedback
-    # BM25 expansion, MinHash estimate-vs-exact Jaccard calibration
-    # report (sketch-certificate family), trigram LM scoring,
-    # connected-component cluster sizes as an oracle query, Heaps'
-    # law vocabulary-growth fit, an IVF-tier MMR variant — then
-    # re-proof fill from the remaining r01-only greens
-    # (dropna_after_left_join, drop_all_null_columns_q,
-    # string_length_gate, string_toolbox, iso/json/scalar toolboxes,
-    # rollup_quantity, distinct_cardinalities, cube_order_stats,
-    # filter_variety, acctbal_dominance, orders_with_large_items,
-    # brand_price_stats, order_rank_stats,
-    # promo_revenue_by_supp_nation, corr_regression_qty_price,
-    # rich_inactive_customers, customer_set_ops, top100_orders ...).
-]
-
-# r04 window (kept for the historical record / CORRECTNESS_r04 rows)
-_R04_WINDOW = [
-    # never hash-green in r01∪r02∪r03 (r03 verdict item 2)
-    "positional_unnest_embeddings",
-    "array_toolbox_embeddings",
-    "zorder_key_stats",
-    "weighted_sample_docs",
-    "unigram_logprob_scores",
-    "ann_ivf_kmeans_recall",
-    # changed in round 4 — re-prove under the driver
-    "session_funnel",
-    "stateful_session_equiv",
-    # new in round 4
-    "bpe_pair_counts",
-    "bm25_search_topk",
-    "dup_cluster_histogram",
-    "quota_sample_sources",
-    "label_centroid_quality",
-    "tfidf_cosine_pairs",
-    "interpolated_daily_values",
-    "event_value_outliers",
-    "hybrid_search_topk",
-    # round-4b additions (SCD2 / attribution / decontamination /
-    # source-similarity / zipf / pagerank)
-    "scd2_priority_history",
-    "touch_attribution_paths",
-    "benchmark_decontamination",
-    "source_pair_jaccard",
-    "zipf_fit_top_tokens",
-    "pagerank_trade_graph",
-    "ewma_user_daily_value",
-    "cms_token_frequency",
-    "snapshot_diff_orders",
-    "rrf_fusion_topk",
-    "ann_pq_adc_recall",
-    "ann_pq_rerank_recall",
-    "ann_ivfpq_recall",
-    "bpe_learned_merges",
-    "scd2_point_in_time",
-    "k_anonymity_report",
-    "daily_purchase_rate_ci",
-    "ts_similarity_blocked_pairs",
-    "ts_similarity_bruteforce_topk",
-    "label_noise_scan",
-    # round-4c additions (sorted-neighborhood ER / OHLC / purged CV /
-    # bigram LM / SQ8 ANN / BPE encode) — first-time driver checks
-    # outrank re-proof fill
-    "sorted_neighborhood_dups",
-    "ohlc_daily_bars",
-    "bigram_logprob_scores",
-    "ann_sq8_recall",
-    "bpe_encode_stats",
-    # round-4d additions (PCA / PSI drift / triangles / native
-    # session_window)
-    "pca_top_component",
-    "psi_value_drift",
-    "nation_triangle_counts",
-    "native_session_rollup",
-    # round-4e additions (multi-probe ANN / novelty / robust stats /
-    # PR sweep)
-    "ann_multiprobe_recall",
-    "doc_novelty_scores",
-    "value_median_mad_by_type",
-    "quality_pr_curve",
-    # NOT in this round's 50-slot window (oracle-verified locally at
-    # sf0.001/0.01/0.1; queue for the r05 window): event_pair_rules,
-    # segment_target_encoding, purged_fold_report,
-    # window_toolbox_orders, source_temperature_mix,
-    # top3_per_segment_agg, value_quartiles_by_type,
-    # cube_order_counts, source_signature_terms,
-    # label_projection_stats, lang_id_confusion,
-    # score_reliability_bins, cooccurrence_rec_hitrate,
-    # rank_normalized_value_by_type, pca_top2_components,
-    # hll_source_overlap, source_dup_health — plus the r01-green
-    # fill re-proofs.
 ]
 
 
@@ -1000,6 +223,6 @@ def registry() -> dict[str, QuerySpec]:
     from . import round13  # noqa: F401
     from . import round14  # noqa: F401
 
-    ordered = {n: _REGISTRY[n] for n in _R14_WINDOW if n in _REGISTRY}
+    ordered = {n: _REGISTRY[n] for n in DRIVER_WINDOW if n in _REGISTRY}
     ordered.update({n: s for n, s in _REGISTRY.items() if n not in ordered})
     return ordered

@@ -1,4 +1,4 @@
-"""Schema utilities: nested flattening, drift-tolerant selection, renames.
+"""Schema utilities: nested flattening, drift-tolerant selection, dedupe.
 
 The reference flattens every REST payload with ``pandas.json_normalize``
 (`L:45,95,135`, `S:106,118,129,139`) producing dotted column names it
@@ -77,16 +77,6 @@ def select_or_null(
         for c, t in columns.items()
     ]
     return df.select(*exprs)
-
-
-def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Bulk single-column rename (F2, `L:104,177`, `S:130,173`)."""
-    return df.withColumnsRenamed(mapping)
-
-
-def replace_in_column_names(df: DataFrame, old: str, new: str = "_") -> DataFrame:
-    """Rename every column ``old``→``new`` substring (F1, `L:48,183`)."""
-    return df.toDF(*[c.replace(old, new) for c in df.columns])
 
 
 def dedupe_column_names(df: DataFrame) -> DataFrame:

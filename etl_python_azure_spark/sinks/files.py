@@ -27,7 +27,7 @@ import time
 from pyspark.sql import DataFrame
 
 
-def _rebalanced(df: DataFrame, *cols: str) -> DataFrame:
+def rebalanced(df: DataFrame, *cols: str) -> DataFrame:
     """AQE-rebalance *df* before a sink write (optimization guide §6:
     coalesce on write). Without it every upstream task emits one file
     per output partition — the Latinad window refresh wrote 832 files
@@ -43,7 +43,7 @@ def _rebalanced(df: DataFrame, *cols: str) -> DataFrame:
 
 def full_refresh(df: DataFrame, path: str, partition_by: list[str] | None = None):
     """K2: replace the whole table (files sized by AQE rebalance)."""
-    w = _rebalanced(df, *(partition_by or [])).write.mode("overwrite")
+    w = rebalanced(df, *(partition_by or [])).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
@@ -66,7 +66,7 @@ def ranged_overwrite(df: DataFrame, path: str, partition_col: str):
     of one shard per upstream task (guide §6).
     """
     (
-        _rebalanced(df, partition_col)
+        rebalanced(df, partition_col)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
@@ -167,7 +167,7 @@ def multi_table_load(tables: dict[str, DataFrame], root: str) -> str:
     """
     staging = os.path.join(root, "_staging")
     for name, df in tables.items():
-        _rebalanced(df).write.mode("overwrite").parquet(
+        rebalanced(df).write.mode("overwrite").parquet(
             os.path.join(staging, name)
         )
     loaded = []

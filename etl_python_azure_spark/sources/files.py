@@ -13,15 +13,13 @@ don't conform:
 - ``dropmalformed``: silently drop bad rows;
 - ``failfast``: abort on the first bad row (contract enforcement).
 
-:func:`compact_parquet` addresses the operational flip side: many
-small files (e.g. one per micro-batch) destroy scan parallelism
-bookkeeping at scale; rewriting to size-targeted files is routine
-maintenance on any large table.
+``sinks.files.compact_parquet`` addresses the operational flip
+side: many small files (e.g. one per micro-batch) destroy scan
+parallelism bookkeeping at scale; rewriting to fewer, larger files is
+routine maintenance on any large table.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,30 +88,3 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull())
     return clean, bad
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ≈*target_file_bytes* files.
-
-    Returns the output file count. Sizing uses the on-disk byte sum
-    (cheap directory listing, no data scan); the rewrite itself is
-    one read→repartition→write job. Writes to a NEW directory —
-    compacting in place over a live reader is never safe without a
-    table format's snapshot protocol (Delta/Iceberg `OPTIMIZE` is
-    this same operation behind a transaction log).
-    """
-    total = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(src_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(src_dir)
-    df.repartition(n_files).write.mode("overwrite").parquet(dst_dir)
-    return n_files

@@ -67,65 +67,38 @@ def test_driver_window_invariants():
     """The correctness driver records the FIRST 50 registry entries;
     guard the invariants that make the window worth its slots: 50
     unique names, all registered, and every registry query has an
-    oracle (no rows-only entries slip back in) with no nested output
-    columns (the driver's canonicalizer cannot hash them)."""
-    from etl_python_azure_spark.queries import _R14_WINDOW, registry
+    oracle (no rows-only entries slip back in)."""
+    from etl_python_azure_spark.queries import DRIVER_WINDOW, registry
 
     reg = registry()
-    # the r14 list deliberately OVERFLOWS 50 (missing-name armor:
-    # the driver records the first 50 resolvable entries, so a typo
+    # the window deliberately OVERFLOWS 50 (missing-name armor: the
+    # driver records the first 50 resolvable entries, so a typo
     # slides fill up instead of shrinking the window)
-    resolvable = [n for n in _R14_WINDOW if n in reg]
+    resolvable = [n for n in DRIVER_WINDOW if n in reg]
     assert len(resolvable) >= 50
-    assert len(set(_R14_WINDOW)) == len(_R14_WINDOW)
+    assert len(set(DRIVER_WINDOW)) == len(DRIVER_WINDOW)
     assert list(reg)[:50] == resolvable[:50]
     assert all(spec.oracle is not None for spec in reg.values())
-    # r14 mandate (r13 verdict, top_next): slot 1 is the only
-    # registry query with zero driver rows ever (registered mid-r13
-    # by the name de-collision), slots 2-3 the queries NEW in round
-    # 14, slots 4-5 the fold-family persist-audit targets, slots
-    # 6-16 the 11 queries whose plans changed in the r13
-    # persist→localCheckpoint conversion, then the r08-cohort fill
-    # (draining the cohort), then r09-cohort overflow armor
-    never_checked = ["unpivot_status_metrics"]
-    new_r14 = [
-        "media_dimensions_report", "similar_user_activity_ann",
-        "concat_chunk_packing_report",
-    ]
-    # all three fold-family plans changed in the r14 persist audit
-    # (Observation stats, shared-fold survivors checkpoint, flags
-    # probe), so dedup_sidecar_equiv joined the two booked targets
-    audit_targets = [
-        "sidecar_compaction_equiv", "curation_drop_attribution",
-        "dedup_sidecar_equiv",
-    ]
-    changed_r13_plans = [
-        "minhash_dedup_pairs", "incremental_dedup_pairs",
-        "near_dup_clusters", "dup_cluster_histogram",
-        "minhash_jaccard_calibration", "lsh_band_sweep",
-        "quality_keeper_dedup", "keeper_policy_delta",
-        "keeper_fallback_drops", "hll_source_overlap",
-        "ts_similarity_blocked_pairs",
-    ]
-    assert _R14_WINDOW[:1] == never_checked
-    assert _R14_WINDOW[1:4] == new_r14
-    assert _R14_WINDOW[4:7] == audit_targets
-    assert _R14_WINDOW[7:18] == changed_r13_plans
-    # the r08-cohort fill is alphabetical (stalest cohort first; 34
-    # names, of which the 18-name head pushes the two alphabetically
-    # last — trailing_week_revenue, trigram_lm_scores — past the
-    # 50-cut to head the r15 queue), then the r09 armor is also
-    # alphabetical
-    r08_fill = _R14_WINDOW[18:52]
-    assert r08_fill == sorted(r08_fill)
-    assert r08_fill[-1] == "trigram_lm_scores"
-    r09_armor = _R14_WINDOW[52:]
-    assert r09_armor == sorted(r09_armor)
-    # every r14-new name must resolve by round end (they land over
-    # the round's commits; the `resolvable` armor above keeps the
-    # window at 50 meanwhile)
-    missing = [n for n in new_r14 if n not in reg]
-    assert not missing or len(resolvable) >= 50, missing
+
+
+# sha256 of json.dumps([[name, oracle_sql], ...]) in registry() order:
+# pins every registry name, its slot and its oracle SQL byte for byte,
+# so a refactor of the registry or the query modules is provably a
+# no-op for the driver. Recompute only when a query is meant to change.
+REGISTRY_PIN = (
+    "e155071b03a571401794b9bebefcd8672e3bc6da71e63f50bd1a2675eaf35f41"
+)
+
+
+def test_registry_order_and_oracles_pinned():
+    import hashlib
+
+    from etl_python_azure_spark.queries import registry
+
+    pairs = [[name, spec.oracle] for name, spec in registry().items()]
+    digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
+    assert len(pairs) == 282
+    assert digest == REGISTRY_PIN
 
 
 def _script_names(filename: str, attrs: list[str]) -> list[str]:
@@ -160,24 +133,10 @@ def _coupled_names(source: str) -> list[str]:
         return _script_names(
             os.path.join("scripts", "dump_plans.py"), ["QUERIES"]
         )
-    if source == "window_r09":
-        from etl_python_azure_spark.queries import _R09_WINDOW
+    if source == "driver_window":
+        from etl_python_azure_spark.queries import DRIVER_WINDOW
 
-        return list(_R09_WINDOW)
-    if source == "windows_historical":
-        from etl_python_azure_spark.queries import (
-            _R04_WINDOW,
-            _R05_WINDOW,
-            _R06_WINDOW,
-            _R10_WINDOW,
-            _R11_WINDOW,
-            _R12_WINDOW,
-        )
-
-        return [
-            *_R04_WINDOW, *_R05_WINDOW, *_R06_WINDOW, *_R10_WINDOW,
-            *_R11_WINDOW, *_R12_WINDOW,
-        ]
+        return list(DRIVER_WINDOW)
     if source == "artifact_consumers":
         from etl_python_azure_spark.queries._artifacts import (
             artifact_consumers,
@@ -189,14 +148,13 @@ def _coupled_names(source: str) -> list[str]:
 
 @pytest.mark.parametrize(
     "source",
-    ["bench", "plan_audit", "window_r09", "windows_historical",
-     "artifact_consumers"],
+    ["bench", "plan_audit", "driver_window", "artifact_consumers"],
 )
 def test_registry_coupled_lists_resolve(source):
     """Every query name any registry-coupled list mentions — the
-    bench lists, the plan-audit list, the driver windows (current
-    and historical), the train-once artifact consumer sets — must
-    resolve in the registry, and each list must be non-empty.
+    bench lists, the plan-audit list, the driver window, the
+    train-once artifact consumer sets — must resolve in the
+    registry, and each list must be non-empty.
     A typo would silently shrink the bench (names are filtered with
     `if q in reg`), skip prewarm for a real consumer (bench re-times
     training), crash the plan audit, or burn a driver window slot on

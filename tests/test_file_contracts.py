@@ -1,13 +1,10 @@
-"""Schema-contract file sources + parquet compaction."""
+"""Schema-contract file sources."""
 
 from __future__ import annotations
-
-import glob
 
 from pyspark.sql import types as T
 
 from etl_python_azure_spark.sources.files import (
-    compact_parquet,
     read_csv_contract,
     read_jsonl_contract,
     split_corrupt,
@@ -60,14 +57,3 @@ def test_csv_contract_reads_with_header(spark, tmp_path):
         (1, "a", 0.5),
         (2, "b", 1.5),
     }
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    # many tiny files (one per partition)
-    spark.range(10_000).repartition(64).write.parquet(src)
-    assert len(glob.glob(f"{src}/*.parquet")) == 64
-    compact_parquet(spark, src, dst, target_file_bytes=10 * 1024 * 1024)
-    out_files = glob.glob(f"{dst}/*.parquet")
-    assert len(out_files) <= 4  # tiny data → a handful of files
-    assert spark.read.parquet(dst).count() == 10_000

@@ -239,6 +239,23 @@ def test_curate_corpus_quality_keeper_flips_survivor(spark, tmp_path):
     assert 1 in kept_ids["quality"] and 0 not in kept_ids["quality"]
 
 
+def test_unknown_keeper_raises_before_spark():
+    """Both curation chains reject an unknown keeper before touching
+    Spark: with no session at all, the only possible failure is the
+    keeper check."""
+    import pytest
+
+    from etl_python_azure_spark.plans.curation import (
+        curate_corpus,
+        curate_corpus_v3_frames,
+    )
+
+    with pytest.raises(ValueError, match="unknown keeper policy"):
+        curate_corpus(None, "unused", "unused", keeper="bogus")
+    with pytest.raises(ValueError, match="unknown keeper policy"):
+        curate_corpus_v3_frames(None, "unused", keeper="bogus")
+
+
 def test_gopher_repetition_fractions_hand_case(spark):
     """Run-length fold math pinned by hand against the published
     definitions (char mass excludes separators)."""
