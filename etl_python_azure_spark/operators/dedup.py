@@ -5,6 +5,8 @@ tables); these are the north-star LLM-data-pipeline operators
 (BASELINE.json) built Spark-first:
 
 - :func:`exact_dedup` — hash-groupBy; one shuffle on the content hash.
+- :func:`keep_first_copy` / :func:`span_coverage` — the two ingest-
+  dedup rules the curation plans and the registry's folds all call.
 - :func:`word_shingles` → :func:`minhash_signatures` →
   :func:`minhash_lsh_pairs` — MinHash+LSH banding: candidate
   generation is equi-joins on (band, band_signature), so at 100 TB
@@ -110,6 +112,55 @@ def span_fingerprints(
         word_shingles(df, id_col, text_col, n=window, distinct=False)
         .select(F.col(id_col), F.md5("shingle").alias(fp_col))
         .distinct()
+    )
+
+
+def keep_first_copy(df: DataFrame, key: str | Column) -> DataFrame:
+    """THE keep-first rule: one row per *key* (a column name or
+    expression, e.g. ``md5(text)``), the one with the minimum
+    ``doc_id``, every column carried. One window over the key —
+    deterministic, unlike ``dropDuplicates``."""
+    w = Window.partitionBy(key).orderBy(F.asc("doc_id"))
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def span_coverage(
+    spans: DataFrame, state: DataFrame | None = None
+) -> DataFrame:
+    """THE span-coverage rule over :func:`span_fingerprints` rows
+    ``(doc_id, sfp)`` → ``(doc_id, n_spans, n_covered, duplicated)``.
+
+    A span is covered when a lower ``doc_id`` in *spans* holds it
+    (the window min over its holders — *spans* is distinct per
+    (doc_id, sfp)), or when it is in *state*: the admitted span
+    fingerprints ``(sfp)``, passed DISTINCT by the caller, ``None``
+    for batch stages. ``duplicated`` is ``n_spans > 0 AND
+    2·n_covered ≥ n_spans`` — ties drop. Docs with no spans have no
+    row; callers read a missing row as not duplicated."""
+    flagged = spans.withColumn(
+        "__mn", F.min("doc_id").over(Window.partitionBy("sfp"))
+    )
+    cov = F.col("__mn") < F.col("doc_id")
+    if state is not None:
+        flagged = flagged.join(
+            state.withColumn("__st", F.lit(1)), "sfp", "left"
+        )
+        cov = cov | F.col("__st").isNotNull()
+    return (
+        flagged.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_spans"),
+            F.sum(cov.cast("long")).alias("n_covered"),
+        )
+        .withColumn(
+            "duplicated",
+            (F.col("n_spans") > 0)
+            & (F.lit(2) * F.col("n_covered") >= F.col("n_spans")),
+        )
     )
 
 
@@ -766,13 +817,15 @@ def dedup_clusters(
     CC recipe (GraphFrames does the same under the hood) without
     leaving DataFrames.
 
-    Deep-component hardening: every round carries a per-row change
-    flag, so convergence is read off the SAME job that materializes
-    the labels (no second count() pass over the data), and each
-    round's labels are ``localCheckpoint``-ed — the plan is cut to
-    the materialized blocks, so lineage (and task-retry cost) stays
-    O(1) per round instead of growing by one join per iteration,
-    which matters when a chain-shaped component forces many rounds.
+    Deep-component hardening: each round's labels, with a per-row
+    change flag, are ``localCheckpoint``-ed (one job), and
+    convergence is then read by a SEPARATE ``agg(...).collect()``
+    over that checkpoint — a second, small job per round that sums
+    the flags from the materialized blocks without re-running the
+    join. The checkpoint cuts the plan to those blocks, so lineage
+    (and task-retry cost) stays O(1) per round instead of growing by
+    one join per iteration, which matters when a chain-shaped
+    component forces many rounds.
     """
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = fwd.unionByName(

@@ -75,7 +75,8 @@ def cosine_topk(
     same (cosine desc, id asc) total order), and one slim window
     merges the q×blocks×k partials. Bit-identical to the JVM fold
     path; use it when |queries| ≈ |corpus| (the all-pairs
-    verifiers). Requires non-null fixed-dim vectors and numeric ids.
+    verifiers). Requires non-null fixed-dim vectors; the id columns
+    keep the input id type on both paths.
     """
     if blocks is not None:
         sims = _blocked_topk_partials(
@@ -175,11 +176,14 @@ def _blocked_topk_partials(
         "__rid",
         blocks,
     )
+    # id fields take the input id types, as on the JVM fold path
+    q_t = queries.schema[id_col].dataType.simpleString()
+    c_t = corpus.schema[id_col].dataType.simpleString()
     return (
         q_exp.groupby("__gb")
         .cogroup(c_blk.groupby("__gb"))
         .applyInPandas(
-            fn, "query_id bigint, neighbor_id bigint, cosine double"
+            fn, f"query_id {q_t}, neighbor_id {c_t}, cosine double"
         )
     )
 
@@ -696,11 +700,14 @@ def _celled_topk_partials(
             }
         )
 
+    # id fields take the input id types, as on the JVM fold path
+    q_t = probes.schema["query_id"].dataType.simpleString()
+    c_t = index.schema["neighbor_id"].dataType.simpleString()
     return (
         probes.groupby("cell")
         .cogroup(index.groupby("cell"))
         .applyInPandas(
-            fn, "query_id bigint, neighbor_id bigint, cosine double"
+            fn, f"query_id {q_t}, neighbor_id {c_t}, cosine double"
         )
     )
 

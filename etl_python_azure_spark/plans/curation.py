@@ -27,15 +27,18 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..session import eager_checkpoint as _ckpt
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     incremental_lsh_pairs,
+    keep_first_copy,
     minhash_lsh_pairs,
     quality_keeper_drops,
+    span_coverage,
+    span_fingerprints,
 )
 from ..operators.sampling import hash_bucket, quota_sample
 from ..operators.text import gopher_quality_flags
@@ -150,14 +153,8 @@ def curate_corpus(
         "doc_id", "source", "text"
     )
 
-    # exact dedup: one window over the content fingerprint, keep the
-    # min doc_id (deterministic, unlike dropDuplicates)
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.asc("doc_id"))
-    exact = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    # exact dedup: keep the min doc_id per content fingerprint
+    exact = keep_first_copy(kept, F.md5("text"))
     # near-dedup feeds THREE consumers (pair gen reads it twice via
     # the LSH join, the anti-join reads it once) and sits above the
     # dedup window shuffle. localCheckpoint, NOT persist (r13, the
@@ -234,8 +231,8 @@ def curate_increment(
     projection and its LSH band index, never a re-pair):
 
     1. Gopher quality gate on the delta.
-    2. Exact dedup: within-delta keep-min window, then an anti-join
-       of delta fingerprints against base fingerprints.
+    2. Exact dedup: within-delta :func:`keep_first_copy`, then an
+       anti-join of delta fingerprints against base fingerprints.
     3. Near-dedup via :func:`incremental_lsh_pairs` — delta bands
        probe (base ∪ delta) bands; base×base is never recomputed. A
        delta doc near-duplicating EITHER a base doc or a surviving
@@ -243,13 +240,18 @@ def curate_increment(
     4. Span tier (opt-in, *span_window* not None): reject any delta
        doc at least half of whose span_window-token spans are
        covered by the BASE's span-fingerprint table or by a lower-id
-       surviving delta doc (integer 2·covered ≥ total — the batch v3
+       surviving delta doc (:func:`span_coverage` — the batch v3
        span rule, so streaming and batch converge at the span level
-       too; the ``streaming_span_dedup_equiv`` registry query pins
-       the fold).
+       too).
     5. Per-source quota re-check: delta rows only fill whatever
        headroom the base leaves under the cap (rank offset by the
        base's per-source counts).
+
+    The registry fold queries (``streaming_span_dedup_equiv``,
+    ``dedup_sidecar_equiv``, ``sidecar_compaction_equiv``) call the
+    same two operators as stages 2 and 4, so their DuckDB oracles
+    check this code; they do not exercise the quality gate, the LSH
+    tier or the quota.
 
     *sidecar_dir* selects where the base-side probes come from:
 
@@ -326,12 +328,7 @@ def curate_increment(
         carry_cols=["source", "text"],
     ).filter(F.col("pass_all")).select("doc_id", "source", "text")
 
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.asc("doc_id"))
-    in_delta = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    in_delta = keep_first_copy(kept, F.md5("text"))
     vs_base = in_delta.join(
         base_fps,
         F.md5(in_delta.text) == F.col("__fp"),
@@ -381,42 +378,22 @@ def curate_increment(
     survivors = vs_base.join(drop, "doc_id", "left_anti").transform(_ckpt)
 
     if span_window is not None:
-        from ..operators.dedup import span_fingerprints
-
-        ssp = span_fingerprints(
-            survivors, "doc_id", "text", span_window, fp_col="__sfp"
-        )
+        ssp = span_fingerprints(survivors, "doc_id", "text", span_window)
         if sidecar_dir is not None:
             from .sidecars import read_sidecar
 
             base_sp = read_sidecar(spark, sidecar_dir, "spans").select(
-                F.col("sfp").alias("__sfp")
+                "sfp"
             ).distinct()
         else:
             base_sp = span_fingerprints(
-                base, "doc_id", "text", span_window, fp_col="__sfp"
-            ).select("__sfp").distinct()
-        # one window + one flag join + one aggregate (r14): a span is
-        # covered iff it sits in the base span state OR a lower-id
-        # same-delta survivor shares it — ssp is DISTINCT per
-        # (doc_id, __sfp), so "exists lower-id holder" ≡ the window
-        # min over the span's delta holders being below this doc.
-        # Replaces the two semi-joins + union + distinct + count the
-        # probe used to take (set-identical by construction; the
-        # fold queries' oracles re-pin it end to end).
-        mn = F.min("doc_id").over(Window.partitionBy("__sfp"))
-        cov = (
-            (F.col("__mn") < F.col("doc_id")) | F.col("__st").isNotNull()
-        ).cast("long")
+                base, "doc_id", "text", span_window
+            ).select("sfp").distinct()
+        # a span is covered iff it sits in the base span state OR a
+        # lower-id same-delta survivor shares it
         span_drop = (
-            ssp.withColumn("__mn", mn)
-            .join(base_sp.withColumn("__st", F.lit(1)), "__sfp", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.sum(cov).alias("__nc"),
-                F.count(F.lit(1)).alias("__ns"),
-            )
-            .filter(F.lit(2) * F.col("__nc") >= F.col("__ns"))
+            span_coverage(ssp, base_sp)
+            .filter(F.col("duplicated"))
             .select("doc_id")
         )
         survivors = survivors.join(span_drop, "doc_id", "left_anti")
@@ -476,7 +453,7 @@ def curate_corpus_v3_frames(
     ``split`` column), ``leaked`` (cross-split fps) and ``capped``
     (quota-capped train rows).
     """
-    from ..operators.dedup import normalize_url, span_fingerprints
+    from ..operators.dedup import normalize_url
     from ..operators.sampling import dsir_importance_scores
 
     near_dedup = _near_dedup(keeper)
@@ -488,14 +465,7 @@ def curate_corpus_v3_frames(
     # URL keep-one: min doc_id per canonical URL (the CCNet /
     # RefinedWeb first pass — one window keyed on the canonical URL)
     if url_expr is not None:
-        uw = Window.partitionBy(normalize_url(url_expr)).orderBy(
-            F.asc("doc_id")
-        )
-        d = (
-            d.withColumn("__urn", F.row_number().over(uw))
-            .filter(F.col("__urn") == 1)
-            .drop("__urn")
-        )
+        d = keep_first_copy(d, normalize_url(url_expr))
     frames["url"] = d
     # persist the flags frame: it feeds the exact-dedup chain AND the
     # one-pass n_url/n_quality aggregate of the counts consumer
@@ -508,12 +478,7 @@ def curate_corpus_v3_frames(
     )
     frames["quality"] = kept
 
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.asc("doc_id"))
-    exact = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    ).transform(_ckpt)
+    exact = keep_first_copy(kept, F.md5("text")).transform(_ckpt)
     frames["exact"] = exact
 
     near = near_dedup(exact, flags, near_dup_threshold).transform(_ckpt)
@@ -523,15 +488,9 @@ def curate_corpus_v3_frames(
     # covered by a lower-id doc (2·covered ≥ total, ties dropped) is
     # residual duplicated text the fuzzy tier missed (different
     # enough globally, same long spans locally)
-    spans = span_fingerprints(
-        near, "doc_id", "text", span_window, fp_col="__fp"
-    )
-    mn = F.min("doc_id").over(Window.partitionBy("__fp"))
     span_drop = (
-        spans.withColumn("__cov", (mn < F.col("doc_id")).cast("long"))
-        .groupBy("doc_id")
-        .agg(F.sum("__cov").alias("__nc"), F.count("*").alias("__ns"))
-        .filter(F.lit(2) * F.col("__nc") >= F.col("__ns"))
+        span_coverage(span_fingerprints(near, "doc_id", "text", span_window))
+        .filter(F.col("duplicated"))
         .select("doc_id")
     )
     span_kept = near.join(span_drop, "doc_id", "left_anti").transform(_ckpt)

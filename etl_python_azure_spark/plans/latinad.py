@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import bounded_string_gate, drop_all_null_columns, surrogate_key
+from ..functions.keys import csv_id_list
 from ..operators.joins import left_join
 from ..schema import select_existing
 from ..sinks.files import full_refresh, ranged_overwrite
@@ -128,8 +129,7 @@ def run_latinad(
     ).withColumn("arch", bounded_string_gate("arch", 50))  # F3 (`L:116`)
 
     # S3: distributed report fan-out -----------------------------------------
-    display_ids = displays.select(F.col("id").cast("string")).collect()  # F6, ≤11k
-    display_csv = ",".join(r[0] for r in display_ids)
+    display_csv = csv_id_list(displays, "id")  # F6, ≤11k
     requests = build_report_requests(
         spark, contents.select("id"), display_csv, base_url,
         window_start, window_end,

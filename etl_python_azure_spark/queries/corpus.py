@@ -284,8 +284,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+    from ..operators.dedup import keep_first_copy
     from ..operators.text import text_quality, token_counts
 
     d = load_tables(spark, sf_dir, "documents")
@@ -298,12 +297,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("keep"))
         .select("doc_id", "source", "text")
     )
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.asc("doc_id"))
-    reps = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    reps = keep_first_copy(kept, F.md5("text"))
     sampled = deterministic_sample(reps, "doc_id", 50)
     return (
         token_counts(sampled, carry_cols=["source"])

@@ -817,18 +817,13 @@ def streaming_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("fp")
     )
-    from pyspark.sql import Window as W
+    from ..operators.dedup import keep_first_copy
 
     admitted = None
     for i in range(4):
-        batch = d.filter(F.pmod("doc_id", F.lit(4)) == i)
-        w = W.partitionBy("fp").orderBy(F.asc("doc_id"))
-        batch = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .withColumn("batch_idx", F.lit(i).cast("long"))
-        )
+        batch = keep_first_copy(
+            d.filter(F.pmod("doc_id", F.lit(4)) == i), "fp"
+        ).withColumn("batch_idx", F.lit(i).cast("long"))
         if admitted is None:
             admitted = batch
         else:

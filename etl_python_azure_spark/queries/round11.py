@@ -36,9 +36,10 @@ are collision-free).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import keep_first_copy, span_coverage, span_fingerprints
 from ..session import load_tables
 from . import _span_sql, register
 from .round10 import _V3_CTES, _V3_DSIR_B, _V3_QUOTA, _V3_SPAN_W, _v3_url_expr
@@ -743,19 +744,21 @@ def streaming_span_dedup_equiv(
     same batch (integer 2·covered ≥ total, the v3 span rule), (4)
     fold admitted docs and their spans into the state. Rejected
     docs' spans never enter the state — at-most-once admission at
-    BOTH the doc and the span level (the
-    ``..streaming.corpus_ingest`` admit fold with
-    ``span_window=8``; its foreachBatch form is pinned by pytest).
+    BOTH the doc and the span level.
+
+    Steps (1) and (3) call ``keep_first_copy`` and ``span_coverage``,
+    as ``curate_increment`` does (the ``..streaming.corpus_ingest``
+    admit fold with ``span_window=8``, pinned by pytest), so this
+    oracle checks that code — but not its quality gate, LSH tier or
+    quota.
 
     Scale shape per batch: one within-batch fingerprint window, one
-    anti-join against the state, one span explode of the batch and
-    two fp-keyed semi-joins (state spans + lower-id batch spans) —
-    all delta-sized except the span-state probe, which at 100 TB
-    reads the maintained spans sidecar instead of a state
-    re-projection (implemented in r12: ``plans.sidecars``, pinned
-    end-to-end by the ``dedup_sidecar_equiv`` twin of this query)."""
-    from ..operators.dedup import span_fingerprints
-
+    anti-join against the state, then one span window, one flag join
+    against the span state and one aggregate — all delta-sized
+    except the span-state probe, which at 100 TB reads the
+    maintained spans sidecar instead of a state re-projection
+    (``plans.sidecars``, pinned end-to-end by the
+    ``dedup_sidecar_equiv`` twin of this query)."""
     d = load_tables(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("fp"), "text"
     )
@@ -768,50 +771,23 @@ def streaming_span_dedup_equiv(
     spans_all = span_fingerprints(
         d, "doc_id", "text", _SSD_W
     ).localCheckpoint()
-    ns = spans_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ns"))
 
-    admitted = None  # (doc_id, fp, batch_idx, ns, nc)
+    admitted = None  # (doc_id, fp, n_spans, n_covered, duplicated, batch_idx)
     state_fp = None  # admitted exact fingerprints
     state_sp = None  # admitted span fingerprints
     for k in range(_SSD_BATCHES):
         batch = d.filter(F.pmod("doc_id", F.lit(_SSD_BATCHES)) == k)
-        w = Window.partitionBy("fp").orderBy(F.asc("doc_id"))
-        survivors = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("doc_id", "fp")
-        )
+        survivors = keep_first_copy(batch, "fp").select("doc_id", "fp")
         if state_fp is not None:
             survivors = survivors.join(state_fp, "fp", "left_anti")
         bsp = spans_all.join(
             survivors.select("doc_id"), "doc_id", "left_semi"
         )
-        # covered: span held by a lower-id same-batch survivor (bsp
-        # is DISTINCT per (doc_id, sfp), so "exists lower-id holder"
-        # ≡ window min over the span's batch holders < this doc) or
-        # present in the admitted span state — one window + one flag
-        # join + one aggregate instead of two semi-joins + union +
-        # distinct + count (r14; set-identical, oracle-pinned)
-        flagged = bsp.withColumn(
-            "__mn", F.min("doc_id").over(Window.partitionBy("sfp"))
-        )
-        cov = F.col("__mn") < F.col("doc_id")
-        if state_sp is not None:
-            flagged = flagged.join(
-                state_sp.withColumn("__st", F.lit(1)), "sfp", "left"
-            )
-            cov = cov | F.col("__st").isNotNull()
-        nc = flagged.groupBy("doc_id").agg(
-            F.sum(cov.cast("long")).alias("nc")
-        )
+        # a doc with no spans has no coverage row: 0 spans, kept
         adm = (
-            survivors.join(ns, "doc_id", "left")
-            .withColumn("ns", F.coalesce("ns", F.lit(0)))
-            .join(nc, "doc_id", "left")
-            .withColumn("nc", F.coalesce("nc", F.lit(0)))
-            .filter(
-                ~((F.col("ns") > 0) & (2 * F.col("nc") >= F.col("ns")))
-            )
+            survivors.join(span_coverage(bsp, state_sp), "doc_id", "left")
+            .fillna({"n_spans": 0, "n_covered": 0, "duplicated": False})
+            .filter(~F.col("duplicated"))
             .withColumn("batch_idx", F.lit(k).cast("long"))
             .localCheckpoint()  # truncate the per-batch fold lineage
         )
@@ -831,12 +807,7 @@ def streaming_span_dedup_equiv(
         admitted = (
             adm if admitted is None else admitted.unionByName(adm)
         )
-    return admitted.select(
-        "doc_id",
-        "batch_idx",
-        F.col("ns").cast("long").alias("n_spans"),
-        F.col("nc").cast("long").alias("n_covered"),
-    )
+    return admitted.select("doc_id", "batch_idx", "n_spans", "n_covered")
 
 
 # --------------------------------------------------------------------------
@@ -888,19 +859,8 @@ def span_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc (covered, total) pair is computed ONCE; the grid is a
     broadcast 3-row dim (integer nc·100 ≥ ns·pct compares, no
     floats)."""
-    from ..operators.dedup import span_fingerprints
-
     d = load_tables(spark, sf_dir, "documents")
-    spans = span_fingerprints(d, "doc_id", "text", _STS_W, fp_col="fp")
-    mn = F.min("doc_id").over(Window.partitionBy("fp"))
-    per = (
-        spans.withColumn("__cov", (mn < F.col("doc_id")).cast("long"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("__cov").alias("nc"),
-            F.count(F.lit(1)).alias("ns"),
-        )
-    )
+    per = span_coverage(span_fingerprints(d, "doc_id", "text", _STS_W))
     nt = d.select(
         "doc_id",
         F.size(F.split(F.lower(F.col("text")), " ")).alias("ntok"),
@@ -908,7 +868,9 @@ def span_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = spark.createDataFrame(
         [(p,) for p in _STS_GRID], "threshold_pct long"
     )
-    dropped = F.col("nc") * 100 >= F.col("ns") * F.col("threshold_pct")
+    dropped = (
+        F.col("n_covered") * 100 >= F.col("n_spans") * F.col("threshold_pct")
+    )
     return (
         per.join(nt, "doc_id")
         .crossJoin(F.broadcast(grid))

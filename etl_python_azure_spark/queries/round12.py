@@ -10,7 +10,10 @@ The r11-verdict queue, as first-class oracle-checked queries:
   100 TB ingest shape the ``curate_increment`` docstrings promised.
   The oracle is the same unrolled fold as
   ``streaming_span_dedup_equiv`` (reprojection semantics), so a
-  green row IS the sidecar-vs-reprojection equivalence proof.
+  green row IS the sidecar-vs-reprojection equivalence proof. Its
+  exact and span tiers are the ``keep_first_copy`` and
+  ``span_coverage`` operators that ``curate_increment`` runs; the
+  quality gate, the LSH tier and the quota are not exercised here.
 - ``token_budget_equalized`` — budget-constrained selection through
   ``ranked_cumsum(equalize=True)``: the histogram-equalized bucket
   edges (one bounded ``approxQuantile`` collect) that keep every
@@ -30,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import keep_first_copy, span_coverage, span_fingerprints
 from ..session import load_tables
 from . import register
 from .round11 import _ssde_oracle
@@ -70,7 +74,6 @@ def _sidecar_admit_fold(
     import shutil
     import tempfile
 
-    from ..operators.dedup import span_fingerprints
     from ..plans.sidecars import (
         append_sidecars,
         compact_sidecars,
@@ -90,14 +93,7 @@ def _sidecar_admit_fold(
             batch = d.filter(
                 F.pmod("doc_id", F.lit(batches)) == k
             ).select("doc_id", "source", "text", fp.alias("fp"))
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("fp").orderBy(F.asc("doc_id"))
-            survivors = (
-                batch.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            survivors = keep_first_copy(batch, "fp")
             # exact tier: probe the fp SIDECAR (not the base text)
             state_fp = read_sidecar(spark, sc_dir, "fp")
             # checkpointed because BOTH the span projection below
@@ -108,45 +104,18 @@ def _sidecar_admit_fold(
                 state_fp.select("fp"), "fp", "left_anti"
             ).localCheckpoint()
             # span tier: batch spans vs the span SIDECAR or a
-            # lower-id same-batch exact survivor. One window + one
-            # flag join + ONE aggregate producing both ns and nc
-            # (r14): bsp is DISTINCT per (doc_id, sfp), so "exists
-            # lower-id same-batch holder" ≡ window min over the
-            # span's batch holders < this doc; the sidecar probe
-            # becomes a distinct-sfp flag join. Replaces the
-            # self-semi-join + semi-join + union + distinct + two
-            # aggregates (set-identical; the shared oracle re-pins
-            # it), and bsp's single consumer no longer needs its own
-            # checkpoint.
+            # lower-id same-batch exact survivor; a doc with no spans
+            # has no coverage row (0 spans, kept)
             bsp = span_fingerprints(survivors, "doc_id", "text", span_w)
-            state_sp = read_sidecar(spark, sc_dir, "spans")
-            flagged = bsp.withColumn(
-                "__mn", F.min("doc_id").over(Window.partitionBy("sfp"))
-            ).join(
-                state_sp.select("sfp").distinct().withColumn(
-                    "__st", F.lit(1)
-                ),
-                "sfp",
-                "left",
-            )
-            cov = (
-                (F.col("__mn") < F.col("doc_id"))
-                | F.col("__st").isNotNull()
-            ).cast("long")
-            counts = flagged.groupBy("doc_id").agg(
-                F.count(F.lit(1)).alias("ns"),
-                F.sum(cov).alias("nc"),
-            )
+            state_sp = read_sidecar(spark, sc_dir, "spans").select(
+                "sfp"
+            ).distinct()
             adm = (
-                survivors.join(counts, "doc_id", "left")
-                .withColumn("ns", F.coalesce("ns", F.lit(0)))
-                .withColumn("nc", F.coalesce("nc", F.lit(0)))
-                .filter(
-                    ~(
-                        (F.col("ns") > 0)
-                        & (2 * F.col("nc") >= F.col("ns"))
-                    )
+                survivors.join(
+                    span_coverage(bsp, state_sp), "doc_id", "left"
                 )
+                .fillna({"n_spans": 0, "n_covered": 0, "duplicated": False})
+                .filter(~F.col("duplicated"))
                 .withColumn("batch_idx", F.lit(k).cast("long"))
                 .localCheckpoint()
             )
@@ -165,12 +134,7 @@ def _sidecar_admit_fold(
                 # between batches, never concurrently with one — the
                 # documented compaction window
                 compact_sidecars(spark, sc_dir, files_per_table=1)
-            rep = adm.select(
-                "doc_id",
-                "batch_idx",
-                F.col("ns").cast("long").alias("n_spans"),
-                F.col("nc").cast("long").alias("n_covered"),
-            )
+            rep = adm.select("doc_id", "batch_idx", "n_spans", "n_covered")
             out = rep if out is None else out.unionByName(rep)
         # every step above is checkpointed, so `out` reads checkpoint
         # blocks, not the temp parquet — return it directly (no

@@ -63,8 +63,11 @@ def streaming_curated_ingest(
 
     *span_window* (opt-in) adds the cross-doc SPAN dedup tier to the
     admit fold — streaming admission then applies the batch v3 span
-    rule per micro-batch (see ``curate_increment`` stage 4 and the
-    ``streaming_span_dedup_equiv`` registry query).
+    rule per micro-batch (see ``curate_increment`` stage 4). The
+    ``streaming_span_dedup_equiv`` and ``dedup_sidecar_equiv``
+    registry queries call the same ``keep_first_copy`` and
+    ``span_coverage`` operators as ``curate_increment``; they do not
+    exercise its quality gate, LSH tier or quota.
 
     *sidecar_dir* (opt-in) maintains the :mod:`..plans.sidecars`
     fingerprint/band/span tables: each micro-batch probes the base

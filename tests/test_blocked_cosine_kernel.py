@@ -117,24 +117,39 @@ def test_topk_kernel_bit_identical(spark, blocks):
     assert _as_strings(got) == _as_strings(want)
 
 
-def test_topk_kernel_tie_break(spark):
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+def test_topk_kernel_tie_break(spark, id_type):
     """Exact cosine ties must break on ascending neighbor_id in the
-    blocked path too: duplicate vectors give cosine == 1.0 exactly."""
+    blocked path too: duplicate vectors give cosine == 1.0 exactly.
+    Both numpy kernels (cosine_topk blocks, ivf_topk arrow_rank) must
+    keep the input id type, as the JVM paths do."""
+    from etl_python_azure_spark.operators.similarity import ivf_topk
+
+    conv = str if id_type == "string" else int
     rows = [
-        (1, [1.0, 0.0]),
-        (2, [1.0, 0.0]),
-        (3, [1.0, 0.0]),
-        (4, [0.0, 1.0]),
+        (conv(1), [1.0, 0.0]),
+        (conv(2), [1.0, 0.0]),
+        (conv(3), [1.0, 0.0]),
+        (conv(4), [0.0, 1.0]),
     ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    df = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<float>"
+    )
     got = cosine_topk(df, df, k=2, blocks=2)
     want = _fold_topk(df, df, "vec_id", "embedding", 2)
+    assert got.schema == want.schema
     assert _as_strings(got) == _as_strings(want)
     top = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
+        (str(r["query_id"]), r["rank"]): str(r["neighbor_id"])
         for r in got.collect()
     }
-    assert top[(1, 1)] == 2 and top[(1, 2)] == 3  # id-ascending ties
+    assert top[("1", 1)] == "2" and top[("1", 2)] == "3"  # id-ascending ties
+    ivf_np, ivf_jvm = (
+        ivf_topk(df, df, k=2, num_centroids=2, nprobe=2, arrow_rank=a)
+        for a in (True, False)
+    )
+    assert ivf_np.schema == ivf_jvm.schema
+    assert _as_strings(ivf_np) == _as_strings(ivf_jvm)
 
 
 def test_kernel_survives_count_pruning(spark):
