@@ -11,6 +11,8 @@ Boundary differences vs the reference, by design:
 
 - the report fan-out runs on executors (:func:`..sources.rest
   .distributed_fetch`), not a driver asyncio loop (`L:142–164`);
+  each task still overlaps its GETs on a bounded thread pool, as
+  the reference's asyncio loop did;
 - failures are (status, error) columns, the run continues (T5);
 - the 27-day window load is a dynamic-partition overwrite
   (:func:`..sinks.files.ranged_overwrite`) instead of a ranged SQL

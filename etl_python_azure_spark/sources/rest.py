@@ -9,10 +9,13 @@ Restates the reference's four source shapes (SURVEY §2.1):
 - S3 **distributed fan-out** (:func:`distributed_fetch`) — the
   reference's asyncio gather of ≤11k report GETs (`L:129–164`)
   becomes ``mapInPandas`` over a requests DataFrame: each executor
-  partition performs its slice of the HTTP calls, failures are
-  captured per-row as (status, error) columns instead of aborting
-  (T5 semantics, `L:158–162`). This is the piece that actually
-  scales — the id set never lands on the driver.
+  partition performs its slice of the HTTP calls, overlapping up to
+  :data:`FETCH_IN_FLIGHT` of them on a thread pool, so at most
+  partitions × :data:`FETCH_IN_FLIGHT` GETs are in flight and the
+  transport must be thread-safe. Failures are captured per-row as
+  (status, error) columns instead of aborting (T5 semantics,
+  `L:158–162`). This is the piece that actually scales — the id set
+  never lands on the driver.
 - S4 query-param pushdown is just URL construction here (the
   "predicate" is encoded in the request column upstream).
 
@@ -25,6 +28,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -33,19 +37,33 @@ from ..schema import flatten_struct_columns
 
 Transport = Callable[[str, dict], tuple[int, str]]
 
+#: GETs one :func:`distributed_fetch` task keeps in flight. On the
+#: Latinad benchmark (300 GETs of 20 ms, ``local[4]`` on 4 vCPUs) the
+#: fastest iteration took 3.8–4.0 s one GET at a time, 2.6–2.7 s at 4
+#: and 8, 2.1–2.4 s at 16 and 2.3–2.5 s at 32 and 64: the gain levels
+#: off at 16.
+FETCH_IN_FLIGHT = 16
+
 
 def urllib_transport(timeout: float = 600.0) -> Transport:
     """Default transport: stdlib urllib GET with the reference's
-    600 s ceiling (`L:131`). Returns (status, body); transport-level
-    failures surface as status=-1 with the error text as body."""
+    600 s ceiling (`L:131`). Returns (status, body): a non-2xx reply
+    keeps its HTTP status and body; failures below HTTP (refused
+    connection, DNS, timeout) surface as status=-1 with the error text
+    as body. Each call opens its own connection, so the transport is
+    thread-safe."""
 
     def _get(url: str, headers: dict) -> tuple[int, str]:
+        import urllib.error
         import urllib.request
 
         req = urllib.request.Request(url, headers=headers or {})
         try:
             with urllib.request.urlopen(req, timeout=timeout) as resp:
                 return resp.status, resp.read().decode("utf-8", "replace")
+        except urllib.error.HTTPError as ex:  # 4xx/5xx: a reply, not a failure
+            with ex:
+                return ex.code, ex.read().decode("utf-8", "replace")
         except Exception as ex:  # noqa: BLE001 — per-request capture (T5)
             return -1, str(ex)
 
@@ -211,8 +229,11 @@ def distributed_fetch(
     transport error) + ``body`` (payload or error text). Per-row
     failure capture, the run never aborts (T5, `L:158–162`).
 
-    Scale: ``repartition`` the requests to bound per-target
-    concurrency; each partition reuses one transport. Replaces the
+    Scale: each task sends its rows' GETs through one thread pool,
+    :data:`FETCH_IN_FLIGHT` at a time, so ``repartition(n)`` bounds
+    per-target concurrency at n × :data:`FETCH_IN_FLIGHT` GETs in
+    flight. The transport is called from those threads and must be
+    thread-safe; one that raises fails the task. Replaces the
     driver-side asyncio fan-out — requests never serialize through
     the driver.
     """
@@ -227,16 +248,14 @@ def distributed_fetch(
     hdrs = dict(headers or {})
 
     def run_partition(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            statuses, bodies = [], []
-            for url in pdf[url_col]:
-                s, b = transport(url, hdrs)
-                statuses.append(s)
-                bodies.append(b)
-            pdf = pdf.copy()
-            pdf["status"] = statuses
-            pdf["body"] = bodies
-            yield pdf
+        with ThreadPoolExecutor(FETCH_IN_FLIGHT) as pool:
+            for pdf in batches:
+                # map yields in input order, so replies stay on their rows
+                replies = list(pool.map(lambda u: transport(u, hdrs), pdf[url_col]))
+                pdf = pdf.copy()
+                pdf["status"] = [s for s, _ in replies]
+                pdf["body"] = [b for _, b in replies]
+                yield pdf
 
     return requests_df.mapInPandas(run_partition, schema=out_schema)
 

@@ -2,17 +2,23 @@
 
 from __future__ import annotations
 
+import http.server
 import json
+import socket
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_python_azure_spark.sources.rest import (
+    FETCH_IN_FLIGHT,
     distributed_fetch,
     fetch_json,
     paginated_fetch,
     parse_fetched_json,
     records_to_df,
+    urllib_transport,
 )
 
 
@@ -85,6 +91,107 @@ def test_distributed_fetch_error_capture(spark):
     got = {r.content: (r.display, r.shows) for r in parsed.collect()}
     assert got == {1: (7, 3), 2: (7, 3)}
     assert "body" not in parsed.columns
+
+
+def _aligned_reply(i: int) -> tuple[int, str]:
+    if i % 5 == 3:
+        return 500, f"server error {i}"
+    if i % 7 == 6:
+        return -1, f"connection refused {i}"
+    return 200, json.dumps({"report": [{"content": i}]})
+
+
+def test_distributed_fetch_overlaps_gets_and_keeps_rows_aligned(spark, tmp_path):
+    """One task's GETs overlap, at most FETCH_IN_FLIGHT at a time, and
+    each reply lands on its own row even when replies come back out
+    of order."""
+    stamps = tmp_path / "stamps.log"
+
+    def transport(url, headers):
+        i = int(url.rsplit("/", 1)[-1])
+        t0 = time.monotonic()
+        time.sleep(0.005 * ((i * 7) % 11 + 1))  # 5–55 ms: out of order
+        t1 = time.monotonic()
+        with open(stamps, "a") as f:
+            f.write(f"{t0} {t1}\n")
+        return _aligned_reply(i)
+
+    n = 24
+    reqs = spark.createDataFrame(
+        [(i, f"tag-{i}", f"http://api/report/{i}") for i in range(n)],
+        "content_id long, tag string, url string",
+    ).coalesce(1)
+    assert reqs.rdd.getNumPartitions() == 1
+    rows = distributed_fetch(reqs, transport).collect()
+
+    assert sorted(r.content_id for r in rows) == list(range(n))
+    for r in rows:
+        assert r.tag == f"tag-{r.content_id}"
+        assert r.url == f"http://api/report/{r.content_id}"
+        assert (r.status, r.body) == _aligned_reply(r.content_id)
+    assert {r.status for r in rows} == {200, 500, -1}
+
+    events = []
+    for line in stamps.read_text().splitlines():
+        t0, t1 = map(float, line.split())
+        events += [(t0, 1), (t1, -1)]
+    in_flight = peak = 0
+    for _, step in sorted(events):  # an end sorts before a start at a tie
+        in_flight += step
+        peak = max(peak, in_flight)
+    assert len(events) == 2 * n
+    assert 1 < peak <= FETCH_IN_FLIGHT
+
+
+def _raising_transport(url, headers):
+    if url.endswith("/9"):
+        raise ValueError("transport bug on report 9")
+    return 200, "{}"
+
+
+def test_distributed_fetch_transport_that_raises_fails_the_task(spark):
+    """Per-row capture is the transport's job: an exception escaping
+    it fails the task instead of becoming a row."""
+    reqs = spark.createDataFrame(
+        [(i, f"http://api/report/{i}") for i in range(12)],
+        "content_id long, url string",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="transport bug on report 9"):
+        distributed_fetch(reqs, _raising_transport).collect()
+
+
+def test_urllib_transport_keeps_http_status():
+    """A 4xx/5xx reply keeps its status and body; only failures below
+    HTTP (here a refused connection) read as -1."""
+
+    class Unavailable(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            body = b"down for maintenance"
+            self.send_response(503)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):
+            pass
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Unavailable)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    transport = urllib_transport(timeout=10)
+    try:
+        url = f"http://127.0.0.1:{server.server_address[1]}/report"
+        assert transport(url, {}) == (503, "down for maintenance")
+        with pytest.raises(RuntimeError, match="status=503"):
+            fetch_json(transport, url)
+    finally:
+        server.shutdown()
+        server.server_close()
+
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        closed_port = s.getsockname()[1]
+    status, body = transport(f"http://127.0.0.1:{closed_port}/report", {})
+    assert status == -1 and body
 
 
 # ---- datatable-protocol pagination properties (r03 verdict item 8) ----
