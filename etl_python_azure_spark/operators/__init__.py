@@ -26,6 +26,7 @@ from .layout import normalize_to_bits, write_zordered, zorder_key  # noqa: F401
 from .range_join import band_join, bucketed_range_join  # noqa: F401
 from .sessionize import sessionize, tumbling_window  # noqa: F401
 from .similarity import (  # noqa: F401
+    cosine_rerank,
     cosine_topk,
     ivf_assign,
     ivf_topk,

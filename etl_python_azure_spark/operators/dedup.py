@@ -672,6 +672,34 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("__norm", F.sqrt(norm2))
 
 
+def _normed(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """:func:`with_norm`, minus the vectors whose norm is zero or
+    NULL — the one rule of every cosine search and kernel. No cosine
+    against such a vector is defined: the JVM fold raises
+    DIVIDE_BY_ZERO under ANSI mode (and ranks the NaN first without
+    it), numpy sorts the NaN last.
+
+    The test reads the elements — a NULL vector, a NULL element or
+    no non-zero element — instead of ``__norm > 0``. Spark pushes a
+    filter on the norm below the projection that computes it, so the
+    interpreted fold would run twice per vector (+25 ms per 2,000
+    64-dim vectors in one task, measured on a 4-vCPU host);
+    ``exists`` stops at the first non-zero element. The two tests
+    agree on every float32 vector; on doubles they differ only when
+    each non-zero element is below ~1e-162, whose square underflows.
+    Neither ``exists`` nor ``forall`` is a comparison, so Spark's
+    runtime-filter rule does not take the filter as selective and
+    inject a bloom-filter subquery (two more jobs) into joins against
+    frames of unknown size, such as checkpoints."""
+    return with_norm(
+        df.where(
+            f"exists({vec_col}, x -> x != 0)"
+            f" AND forall({vec_col}, x -> x IS NOT NULL)"
+        ),
+        vec_col,
+    )
+
+
 # --- blocked Arrow/numpy kernel helpers (r14 optimization) -----------------
 #
 # The interpreted ``aggregate`` fold costs ~5 µs per 64-dim dot
@@ -682,32 +710,22 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 # to the ``aggregate`` fold above and DuckDB's ``list_reduce``, so
 # every cosine is bit-identical cross-engine (elementwise float64
 # add/mul/div and sqrt are correctly rounded in both numpy and the
-# JVM). Requires non-null fixed-dim vectors (the registry corpora
-# guarantee this; a NULL vector would make the fold emit NULL and
-# the kernel raise — loud either way).
+# JVM). The norms ride on the rows from :func:`_normed`, so no
+# kernel sees a zero- or NULL-norm vector.
+
+# corpus hash blocks of the all-pairs kernels (result-invariant)
+_BLOCKS = 8
 
 
-def _np_mats(pdf, id_col: str, vec_col: str):
-    """(ids, float64 matrix, fold-order norms) from a pandas group.
-
-    Asserts every norm is non-zero (r14 ADVICE): Spark ranks NaN
-    cosines as the largest double while numpy sorts them last, so a
-    zero-norm vector would make kernel and JVM fold silently diverge
-    — fail loudly instead (the registry corpora carry none)."""
+def _np_mats(pdf, id_col: str, vec_col: str, norm_col: str):
+    """(ids, float64 matrix, norms) from a pandas group."""
     import numpy as np
 
-    ids = pdf[id_col].to_numpy()
-    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    acc = np.zeros(len(ids), dtype=np.float64)
-    for d in range(mat.shape[1]):
-        acc = acc + mat[:, d] * mat[:, d]
-    if not acc.all():
-        raise ValueError(
-            f"zero-norm {vec_col} vector(s) in cosine kernel input "
-            f"(ids e.g. {ids[acc == 0][:3]!r}) — NaN cosine ordering "
-            "differs between numpy and the JVM fold"
-        )
-    return ids, mat, np.sqrt(acc)
+    return (
+        pdf[id_col].to_numpy(),
+        np.stack(pdf[vec_col].to_numpy()).astype(np.float64),
+        pdf[norm_col].to_numpy(),
+    )
 
 
 def _np_cosines(qm, cm, qn, cn):
@@ -741,21 +759,22 @@ def embedding_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.46,
-    blocks: int = 8,
 ) -> DataFrame:
     """All pairs with cosine similarity ≥ *threshold*.
 
     Brute-force O(n²) — correct baseline and verifier. At 100 TB,
     generate candidates with sign-LSH buckets first
     (:func:`.similarity.lsh_buckets`) and verify only collisions.
+    Vectors with a zero or NULL norm are left out (no cosine against
+    them is defined).
 
     r14: the pair space is tiled through the blocked Arrow/numpy
     kernel (one pandas cogroup task per corpus hash block, the other
     side replicated) instead of a JVM crossJoin evaluating the
     interpreted ``aggregate`` fold per pair — measured 10.6 → ~1.5 s
     at sf0.1 with bit-identical cosines (see the kernel notes above
-    and tests/test_blocked_cosine_kernel.py). *blocks* only tiles
-    the computation; any value yields the same output.
+    and tests/test_blocked_cosine_kernel.py). The block count only
+    tiles the computation; any value yields the same output.
     """
 
     def fn(apdf, bpdf):
@@ -764,8 +783,8 @@ def embedding_cosine_pairs(
 
         if len(apdf) == 0 or len(bpdf) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        aids, am, an = _np_mats(apdf, id_col, vec_col)
-        bids, bm, bn = _np_mats(bpdf, "__rid", "__rvec")
+        aids, am, an = _np_mats(apdf, id_col, vec_col, "__norm")
+        bids, bm, bn = _np_mats(bpdf, "__rid", "__rvec", "__rnorm")
         cos = _np_cosines(am, bm, an, bn)
         keep = (aids[:, None] < bids[None, :]) & (cos >= threshold)
         ai, bi = np.nonzero(keep)
@@ -773,18 +792,21 @@ def embedding_cosine_pairs(
             {"id_a": aids[ai], "id_b": bids[bi], "cosine": cos[ai, bi]}
         )
 
-    a_exp = _replicated(df.select(id_col, vec_col), blocks)
+    n = _normed(df.select(id_col, vec_col), vec_col)
+    a_exp = _replicated(n, _BLOCKS)
     # the corpus side gets DISJOINT column names: a self-cogroup of
     # one base frame otherwise leaves the Python function's argument
     # list referencing the left side's attribute ids, and column
     # pruning then strips the right child to its grouping key
     # (KeyError in the kernel under count()-shaped consumers)
     b_blk = _blocked(
-        df.select(
-            F.col(id_col).alias("__rid"), F.col(vec_col).alias("__rvec")
+        n.select(
+            F.col(id_col).alias("__rid"),
+            F.col(vec_col).alias("__rvec"),
+            F.col("__norm").alias("__rnorm"),
         ),
         "__rid",
-        blocks,
+        _BLOCKS,
     )
     # id output fields take the INPUT id column's type (r14 ADVICE:
     # hardcoded bigint broke/coerced string-id callers that the old

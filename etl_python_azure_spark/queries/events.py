@@ -544,13 +544,10 @@ def similar_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import eager_checkpoint
 
     # checkpoint the shared profile frame (query AND corpus side of
-    # the all-pairs kernel — without it the events aggregation runs
-    # once per side) and route the 1500×1500 pair space through the
-    # blocked Arrow/numpy kernel (r14: 6.7 → ~1 s, bit-identical)
+    # the all-pairs search — without it the events aggregation runs
+    # once per side)
     prof = _user_profiles(spark, sf_dir).transform(eager_checkpoint)
-    return cosine_topk(
-        prof, prof, id_col="user_id", vec_col="profile", k=3, blocks=8
-    )
+    return cosine_topk(prof, prof, id_col="user_id", vec_col="profile", k=3)
 
 
 def _user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -636,9 +633,6 @@ def similar_user_activity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB) runs a single time (the engine's shared-frame rule);
     # the exact twin keeps its unchanged verifier plan
     prof = eager_checkpoint(_user_profiles(spark, sf_dir))
-    # arrow_rank: every user probes 4 of 16 cells, so the probe join
-    # evaluates ~n²/4 interpreted dot folds — the cell-cogroup numpy
-    # kernel computes the same bits vectorized (r14)
     return ivf_topk(
         prof,
         prof,
@@ -647,5 +641,4 @@ def similar_user_activity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         num_centroids=16,
         nprobe=4,
-        arrow_rank=True,
     )

@@ -942,9 +942,8 @@ def ann_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     short list with raw vectors). Same replayable pipeline as
     ``ann_pq_adc_recall`` plus one candidate join; training runs
     once per process via the `_pq_index` frozen artifact."""
-    from ..operators.dedup import dot_expr, with_norm
     from ..operators.pq import normalize_vectors, pq_adc_topk
-    from pyspark.sql import Window
+    from ..operators.similarity import cosine_rerank
 
     em = load_tables(spark, sf_dir, "embeddings")
     nv = normalize_vectors(em)
@@ -953,34 +952,8 @@ def ann_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes, book, nv.filter(F.col("vec_id") < 10),
         m=_PQ_M, dsub=_PQ_DSUB, k=_PQ_RERANK_CAND,
     ).select("query_id", "neighbor_id")
-    n = with_norm(em.select("vec_id", "embedding"))
-    qn = n.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__vq"),
-        F.col("__norm").alias("__nq"),
-    )
-    cn = n.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__vc"),
-        F.col("__norm").alias("__nc"),
-    )
-    rr = (
-        cand.join(F.broadcast(qn), "query_id")
-        .join(cn, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_expr("__vq", "__vc") / (F.col("__nq") * F.col("__nc")))
-            .alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    pq_top = (
-        rr.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", F.col("neighbor_id").alias("pq_neighbor"))
+    pq_top = cosine_rerank(cand, em, em, k=5).select(
+        "query_id", F.col("neighbor_id").alias("pq_neighbor")
     )
     bf = cosine_topk(em, em.filter(F.col("vec_id") < 10), k=5).select(
         "query_id", "neighbor_id"

@@ -7,7 +7,6 @@ from .pipeline import (  # noqa: F401
     windowed_stream_agg,
 )
 from .stateful import (  # noqa: F401
-    pandas_sessions,
     pandas_sessions_vectorized,
     running_totals,
     stateful_sessions,

@@ -290,57 +290,3 @@ def _fold_epoch(
         out = part
     snapshot_write(out, target_path, epoch_id)
     prune_snapshots(target_path)
-
-
-def maintained_cms(
-    stream: DataFrame,
-    token_col: str,
-    target_path: str,
-    checkpoint: str,
-    depth: int = 4,
-    width: int = 512,
-) -> DataStreamWriter:
-    """Incrementally-maintained count-min sketch over a token
-    stream: each micro-batch is sketched (`cms_build`, depth×width
-    cells regardless of batch size) and folded into the stored
-    sketch with `cms_merge` — the streaming twin of
-    :func:`maintained_rollup`, with the same epoch-versioned
-    snapshot guard so at-least-once foreachBatch replay can't
-    double-count a batch. The maintained sketch is EXACTLY the
-    sketch of the whole history (integer cell algebra), so
-    frequency estimates served from it carry the same ≥-true /
-    bounded-overestimate guarantees as a from-scratch build.
-    """
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        _fold_cms_epoch(
-            batch, target_path, token_col, depth, width, epoch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-
-
-def _fold_cms_epoch(
-    batch: DataFrame,
-    target_path: str,
-    token_col: str,
-    depth: int,
-    width: int,
-    epoch_id: int,
-) -> None:
-    from ..operators.aggregates import cms_build, cms_merge
-    from ..sinks.files import prune_snapshots, snapshot_info, snapshot_write
-
-    info = snapshot_info(target_path)
-    if info is not None and epoch_id <= info["version"]:
-        return  # replayed epoch: already folded
-    part = cms_build(batch, token_col, depth=depth, width=width)
-    if info is not None:
-        stored = batch.sparkSession.read.parquet(info["path"])
-        part = cms_merge(stored, part)
-    snapshot_write(part, target_path, epoch_id)
-    prune_snapshots(target_path)

@@ -71,8 +71,9 @@ def _session_step(state, ts_us: int, val: float, gap_us: int):
     open session". Returns (closed_sessions, new_state) where each
     closed session is a (start, last, n, value_sum) tuple. Shared by
     the streaming update function and the batch ``pandas_sessions``
-    operator, so the driver's batch-equivalence oracle checks the
-    exact transition logic the state store runs.
+    twin in tests/test_round3.py, which pins this transition logic
+    to :func:`pandas_sessions_vectorized` — the sessionizer the
+    ``stateful_session_equiv`` oracle checks.
     """
     start, last, n, s = state
     if n == 0:
@@ -175,56 +176,6 @@ def stateful_sessions(
     )
 
 
-def pandas_sessions(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Batch twin of :func:`stateful_sessions`: the same per-event
-    session automaton (``_session_step``), run over a batch DataFrame
-    with ``applyInPandas``.
-
-    Exists so the custom stateful operator's transition logic is
-    batch-checkable against a SQL oracle (query
-    ``stateful_session_equiv``): identical code path, minus the
-    state store. Output matches the streaming op:
-    (key, session_start, session_end, n_events, total_value) with
-    session_end = last event time.
-    """
-    out_schema = (
-        f"{key_col} long, session_start timestamp, session_end timestamp, "
-        "n_events long, total_value double"
-    )
-    gap_us = gap_seconds * 1_000_000
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        key = pdf[key_col].iloc[0]
-        state = (0, 0, 0, 0.0)
-        out = []
-        for ts, val in zip(pdf[ts_col], pdf[value_col]):
-            ts_us = int(ts.value // 1_000)
-            closed, state = _session_step(state, ts_us, float(val), gap_us)
-            out.extend(closed)
-        if state[2] > 0:
-            out.append(state)
-        return pd.DataFrame(
-            {
-                key_col: [key] * len(out),
-                "session_start": [
-                    pd.Timestamp(c[0], unit="us") for c in out
-                ],
-                "session_end": [pd.Timestamp(c[1], unit="us") for c in out],
-                "n_events": [c[2] for c in out],
-                "total_value": [c[3] for c in out],
-            }
-        )
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
-
-
 def pandas_sessions_vectorized(
     df: DataFrame,
     key_col: str = "user_id",
@@ -232,9 +183,9 @@ def pandas_sessions_vectorized(
     value_col: str = "value",
     gap_seconds: int = 1800,
 ) -> DataFrame:
-    """Vectorized batch sessionization: same output as
-    :func:`pandas_sessions`, without per-event Python or per-key
-    dispatch.
+    """Vectorized batch sessionization: same output as the per-event
+    session automaton (``_session_step``), without per-event Python
+    or per-key dispatch.
 
     One Spark shuffle lays events out per-partition sorted by
     (key, ts); each partition then sessionizes in a single numpy

@@ -211,7 +211,8 @@ def main() -> int:
         else:
             print(f"ok   {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} queries pass")
+    n = len(only & qs.keys()) if only else len(qs)
+    print(f"\n{n - len(failures)}/{n} queries pass")
     return 1 if failures else 0
 
 

@@ -188,39 +188,3 @@ def test_sketch_fold_equals_direct_and_bounds_error(spark):
         for est, _ in (d[k], f[k]):
             assert abs(est - exact[k]) / exact[k] < 0.05, (k, est, exact[k])
         assert abs(d[k][0] - f[k][0]) / exact[k] < 0.01  # fold ≈ direct
-
-
-def test_maintained_cms_equals_direct_and_replay_idempotent(spark, tmp_path):
-    from etl_python_azure_spark.operators.aggregates import (
-        cms_build,
-        cms_estimate,
-    )
-    from etl_python_azure_spark.sinks.files import read_snapshot
-    from etl_python_azure_spark.streaming.pipeline import _fold_cms_epoch
-
-    toks = (["alpha"] * 30 + ["beta"] * 10
-            + [f"t{i}" for i in range(100)])
-    full = spark.createDataFrame([(t,) for t in toks], "token string")
-    b0 = spark.createDataFrame([(t,) for t in toks[:70]], "token string")
-    b1 = spark.createDataFrame([(t,) for t in toks[70:]], "token string")
-    tgt = str(tmp_path / "cms")
-    _fold_cms_epoch(b0, tgt, "token", 4, 64, epoch_id=0)
-    _fold_cms_epoch(b1, tgt, "token", 4, 64, epoch_id=1)
-    _fold_cms_epoch(b1, tgt, "token", 4, 64, epoch_id=1)  # replay
-    _fold_cms_epoch(b0, tgt, "token", 4, 64, epoch_id=0)  # stale replay
-
-    maintained = {
-        (r["seed"], r["bucket"]): r["cnt"]
-        for r in read_snapshot(spark, tgt).collect()
-    }
-    direct = {
-        (r["seed"], r["bucket"]): r["cnt"]
-        for r in cms_build(full, depth=4, width=64).collect()
-    }
-    assert maintained == direct
-    # estimates served from the maintained sketch behave identically
-    q = spark.createDataFrame([("alpha",), ("beta",)], "token string")
-    est = {r["token"]: r["cms_estimate"]
-           for r in cms_estimate(read_snapshot(spark, tgt), q,
-                                 depth=4, width=64).collect()}
-    assert est["alpha"] >= 30 and est["beta"] >= 10

@@ -1,4 +1,4 @@
-"""Spark 4 Python DataSource: rest format with partition-parallel pages."""
+"""Spark 4 streaming Python DataSource: rest format with a record cursor."""
 
 from __future__ import annotations
 
@@ -7,38 +7,7 @@ import json
 from etl_python_azure_spark.sources.rest_datasource import RestDataSource
 
 
-# resolved by dotted path on executors (tests dir is on PYTHONPATH)
-def paged_fake_transport(url, headers):
-    start = int(url.split("start=")[1].split("&")[0])
-    length = int(url.split("length=")[1].split("&")[0])
-    # 25 items total
-    items = [
-        {"id": i, "name": f"item{i}", "extra_field_ignored": True}
-        for i in range(start, min(start + length, 25))
-    ]
-    return 200, json.dumps({"data": items})
-
-
-def test_rest_datasource_paged_read(spark):
-    spark.dataSource.register(RestDataSource)
-    df = (
-        spark.read.format("rest")
-        .schema("id long, name string, missing_col string")
-        .option("url", "http://api/items?length={length}&start={start}")
-        .option("page_size", "10")
-        .option("max_pages", "5")
-        .option("envelope_key", "data")
-        .option("transport", "test_rest_datasource.paged_fake_transport")
-        .load()
-    )
-    rows = df.collect()
-    assert len(rows) == 25
-    assert df.rdd.getNumPartitions() == 5  # one per page
-    byid = {r.id: r for r in rows}
-    assert byid[7].name == "item7"
-    assert byid[7].missing_col is None  # drift-tolerant NULL fill
-
-
+# resolved by dotted path on executors (tests dir is on PYTHONPATH);
 # file-backed fake API: ?file=<path> points at a JSON list of records;
 # serves DataTables-style envelopes with recordsTotal
 def stream_fake_transport(url, headers):

@@ -3,6 +3,7 @@ the r09 advice asked for) and the round-10 operators."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -409,13 +410,100 @@ def test_span_contamination_hand_case(spark):
     assert out[50][1] == 1
 
 
+def _gopher_repetition_fractions_fold(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    top_ns: tuple[int, ...] = (2, 3, 4),
+    dup_ns: tuple[int, ...] = (5, 6, 7),
+) -> DataFrame:
+    """The pure-Column sort+fold reference form of
+    ``gopher_repetition_fractions`` — the equivalence oracle for its
+    Arrow kernel."""
+
+    def _charlen(gram: Column, n: int) -> Column:
+        # chars excluding the n-1 separator spaces
+        return F.length(gram) - F.lit(n - 1)
+
+    def rep_stats(arr: Column, n: int) -> Column:
+        """(total_chars, dup_chars, top_chars) over a sorted n-gram
+        array in one fold: dup counts the full run once its second
+        member appears; top tracks max(run_len · charlen)."""
+        init = F.struct(
+            F.lit(0).cast("long").alias("total"),
+            F.lit(0).cast("long").alias("dup"),
+            F.lit(0).cast("long").alias("top"),
+            F.lit(0).cast("long").alias("run"),
+            F.lit(None).cast("string").alias("prev"),
+        )
+
+        def step(acc: Column, x: Column) -> Column:
+            same = x == acc.prev  # null prev → first element branch
+            run = F.when(same, acc.run + 1).otherwise(F.lit(1).cast("long"))
+            ch = _charlen(x, n).cast("long")
+            dup_add = F.when(
+                same & (run == 2), ch * 2  # run confirmed: count both
+            ).otherwise(F.when(same, ch).otherwise(F.lit(0).cast("long")))
+            return F.struct(
+                (acc.total + ch).alias("total"),
+                (acc.dup + dup_add).alias("dup"),
+                F.greatest(acc.top, run * ch).alias("top"),
+                run.alias("run"),
+                x.alias("prev"),
+            )
+
+        return F.aggregate(arr, init, step)
+
+    toks = F.split(F.lower(F.col(text_col)), " ")
+
+    def ngram_arr(n: int) -> Column:
+        return F.expr(
+            f"CASE WHEN size(__toks) >= {n} THEN "
+            f"array_sort(transform(sequence(1, size(__toks) - {n - 1}), "
+            f"i -> concat_ws(' ', slice(__toks, i, {n})))) "
+            f"ELSE CAST(array() AS ARRAY<STRING>) END"
+        )
+
+    ns = sorted(set(top_ns) | set(dup_ns))
+    staged = df.select(
+        F.col(id_col),
+        F.size(toks).alias("n_words"),
+        toks.alias("__toks"),
+    ).select(
+        F.col(id_col),
+        "n_words",
+        *[rep_stats(ngram_arr(n), n).alias(f"__s{n}") for n in ns],
+    )
+
+    def frac(num: Column, den: Column) -> Column:
+        return F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(
+            F.lit(0.0)
+        )
+
+    return staged.select(
+        id_col,
+        F.col("n_words").cast("long").alias("n_words"),
+        *[
+            frac(F.col(f"__s{n}.top"), F.col(f"__s{n}.total")).alias(
+                f"top{n}_char_frac"
+            )
+            for n in top_ns
+        ],
+        *[
+            frac(F.col(f"__s{n}.dup"), F.col(f"__s{n}.total")).alias(
+                f"dup{n}_char_frac"
+            )
+            for n in dup_ns
+        ],
+    )
+
+
 def test_gopher_repetition_kernel_matches_fold(spark):
     """r14: the Arrow kernel must be BIT-identical to the pure-Column
     sort+fold reference on real data (string-compare the doubles)."""
     from pyspark.sql import functions as F
 
     from etl_python_azure_spark.operators.text import (
-        _gopher_repetition_fractions_fold,
         gopher_repetition_fractions,
     )
     from etl_python_azure_spark.session import load_tables

@@ -7,10 +7,13 @@ from __future__ import annotations
 from collections import defaultdict
 from datetime import timedelta
 
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_python_azure_spark.queries import registry
 from etl_python_azure_spark.session import load_tables
+from etl_python_azure_spark.streaming.stateful import _session_step
 
 REG = registry()
 
@@ -122,9 +125,54 @@ def test_incremental_dedup_only_delta_pairs(spark, sf_dir):
     assert incremental_lsh_pairs(d, unrelated, "doc_id", "text").count() == 0
 
 
+def pandas_sessions(
+    df: DataFrame,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    value_col: str = "value",
+    gap_seconds: int = 1800,
+) -> DataFrame:
+    """Batch twin of ``stateful_sessions``: the same per-event
+    session automaton (``_session_step``), run over a batch DataFrame
+    with ``applyInPandas`` — the streaming operator's transition
+    logic minus the state store. Output matches the streaming op:
+    (key, session_start, session_end, n_events, total_value) with
+    session_end = last event time.
+    """
+    out_schema = (
+        f"{key_col} long, session_start timestamp, session_end timestamp, "
+        "n_events long, total_value double"
+    )
+    gap_us = gap_seconds * 1_000_000
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(ts_col, kind="mergesort")
+        key = pdf[key_col].iloc[0]
+        state = (0, 0, 0, 0.0)
+        out = []
+        for ts, val in zip(pdf[ts_col], pdf[value_col]):
+            ts_us = int(ts.value // 1_000)
+            closed, state = _session_step(state, ts_us, float(val), gap_us)
+            out.extend(closed)
+        if state[2] > 0:
+            out.append(state)
+        return pd.DataFrame(
+            {
+                key_col: [key] * len(out),
+                "session_start": [
+                    pd.Timestamp(c[0], unit="us") for c in out
+                ],
+                "session_end": [pd.Timestamp(c[1], unit="us") for c in out],
+                "n_events": [c[2] for c in out],
+                "total_value": [c[3] for c in out],
+            }
+        )
+
+    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
+
+
 def test_vectorized_sessions_match_automaton(spark, sf_dir):
     from etl_python_azure_spark.streaming.stateful import (
-        pandas_sessions,
         pandas_sessions_vectorized,
     )
 
