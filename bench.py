@@ -363,7 +363,7 @@ OPTIONAL = [
 
 def main() -> None:
     from etl_python_azure_spark.queries import registry
-    from etl_python_azure_spark.session import get_spark
+    from etl_python_azure_spark.session import codegen_compilations, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -381,9 +381,16 @@ def main() -> None:
         names = [q for q in names if q in subset_names]
 
     # steady-state warmup: run every query once at the smallest SF so
-    # whole-stage-codegen compilation and JIT happen before the clock
-    # starts — the timings then measure throughput, not first-run
-    # compilation (which a long-lived cluster pays once, not per query)
+    # JIT and most whole-stage-codegen compilation happen before the
+    # clock starts — the timings then measure throughput, not
+    # first-run compilation (which a long-lived cluster pays once, not
+    # per query). The session's generated-class cache holds the whole
+    # registry's classes (session.CODEGEN_CACHE_MAX_ENTRIES), so a
+    # class compiled here is not compiled again in the timed loop.
+    # What the clock can still include: classes whose code differs
+    # between runs or between the warm-up SF and the timed SF (a plan
+    # that changes with input size); the detail file's "compiles" map
+    # counts them per row.
     warm_dir = os.environ.get(
         "SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001"
     )
@@ -510,9 +517,12 @@ def main() -> None:
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "1")))
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
+    # generated classes each row compiled inside its timed samples
+    compiles: dict[str, int] = {}
     for name in names:
         builder = reg[name].builder
         samples = []
+        c0 = codegen_compilations(spark)
         for _ in range(repeats):
             # warm the input file listing/schema, not the result
             t0 = time.time()
@@ -525,6 +535,7 @@ def main() -> None:
             spark.catalog.clearCache()
         timings[name] = min(samples)
         runs[name] = samples
+        compiles[name] = codegen_compilations(spark) - c0
 
     # mid-run load sample, between the per-query loop and the
     # pipeline benches — a drift that starts mid-run shows up here
@@ -555,6 +566,7 @@ def main() -> None:
         # per-query loop (min kept, every sample recorded), so the
         # committed BENCH_DETAIL shows spread for the e2e DAGs too
         samples = []
+        c0 = codegen_compilations(spark)
         for _ in range(repeats):
             root = tempfile.mkdtemp(prefix=f"bench_{name}_")
             try:
@@ -575,6 +587,7 @@ def main() -> None:
         if samples:
             timings[name] = min(samples)
             runs[name] = samples
+            compiles[name] = codegen_compilations(spark) - c0
 
     calib_end = calibrate()
 
@@ -619,6 +632,9 @@ def main() -> None:
             "start": calib_start, "mid": calib_mid, "end": calib_end,
         },
         "repeats": repeats,
+        # classes compiled inside each row's timed samples (0: the
+        # row's codegen was all paid in the warm-up)
+        "compiles": compiles,
     }
     if repeats > 1:
         detail["runs"] = runs

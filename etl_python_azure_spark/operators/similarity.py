@@ -100,6 +100,16 @@ def _cosine() -> Column:
     ).alias("cosine")
 
 
+def _evaluated_once(cos: Column) -> Column:
+    """*cos* as a one-row generator, for a cosine that a threshold
+    filter reads. Catalyst pushes a filter on a plain alias into the
+    join below (the alias inlined into the join condition), and the
+    projection then folds the kept pairs a second time; a filter on a
+    generated column stays above the ``Generate``, so the fold runs
+    once per candidate pair."""
+    return F.explode(F.array(cos))
+
+
 def _rank(sims: DataFrame, k: int) -> DataFrame:
     """Each query's top-*k* rows under (cosine desc, neighbor_id
     asc), numbered 1..k in ``rank``."""
@@ -1172,7 +1182,7 @@ def semdedup_pairs(
             "id_a",
             "id_b",
             F.col("cell").cast("long").alias("cell"),
-            cos.alias("cosine"),
+            _evaluated_once(cos).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
     )
@@ -1380,7 +1390,7 @@ def semantic_contamination(
     if exclude_self:
         joined = joined.filter(F.col(id_col) != F.col("__rid"))
     matches = (
-        joined.select(F.col(id_col), cos.alias("__cos"))
+        joined.select(F.col(id_col), _evaluated_once(cos).alias("__cos"))
         .filter(F.col("__cos") >= F.lit(threshold))
         .groupBy(id_col)
         .agg(

@@ -61,6 +61,9 @@ def test_bench_emits_one_json_line(sf_dir, tmp_path):
     d = json.load(open(detail))
     assert len(d["queries"]) == payload["n_queries"]
     assert d["value"] == payload["value"]
+    # each row's codegen compile count inside its timed samples
+    assert set(d["compiles"]) == set(d["queries"])
+    assert all(isinstance(n, int) and n >= 0 for n in d["compiles"].values())
 
 
 def test_driver_window_invariants():
